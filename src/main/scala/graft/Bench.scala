@@ -71,8 +71,8 @@ object Bench {
     // suite total while the query is in fact dead. Errors are collected
     // per query, emitted in the JSON, and fail the run (exit 1).
     val errors = mutable.LinkedHashMap.empty[String, String]
-    // Per-phase wall timings of the dedup-index lifecycle queries (the
-    // last rep's DedupIndex.append decomposition): lets the scale sweep
+    // Per-query span decomposition (the last rep's graft.Trace spans,
+    // for every query that recorded any): lets the scale sweep
     // machine-check the flat job-and-commit floor against the
     // delta-proportional phases per SF instead of the split being
     // hand-argued in round notes.
@@ -88,19 +88,12 @@ object Bench {
       try { act(fn(spark, sfDir)) }
       catch { case scala.util.control.NonFatal(_) => () }
       spark.catalog.clearCache()
-      // Cleared per query (AFTER the warmup rep): a dedup query that
-      // dies before completing an append must not inherit the previous
-      // query's (or any warmup pass's) decomposition under its own name.
-      graft.operators.DedupIndex.lastAppendPhases.set(Nil)
-      graft.operators.DedupIndex.lastOptimizePhases.set(Nil)
-      graft.operators.DedupIndex.lastLifecyclePhases.set(Nil)
-      graft.operators.PQIndexTx.lastOptimizePhases.set(Nil)
       val ts = (1 to reps).flatMap { _ =>
-        // Cleared per REP (not just per query): the lifecycle log
-        // accumulates across calls, so without this the published
-        // decomposition would be a 5-rep SUM — incomparable with the
-        // per-query median second. Post-loop reads see the LAST rep's.
-        graft.operators.DedupIndex.lastLifecyclePhases.set(Nil)
+        // Drained per REP: spans sum across calls, so the published
+        // decomposition is the LAST rep's, comparable with the
+        // per-query median second — and never a warmup's or another
+        // query's.
+        Trace.drain()
         val t0 = System.nanoTime()
         val ok =
           try { act(fn(spark, sfDir)); true }
@@ -116,26 +109,8 @@ object Bench {
         spark.catalog.clearCache()
         if (ok) Some(elapsed) else None
       }
-      // WHOLE-lifecycle decomposition (last rep's): restore, erase
-      // commits, each append's phases (ap1_/ap2_ prefixed), compaction
-      // and deep-OPTIMIZE phases — the readmit/erase queries run
-      // several lifecycle calls per invocation and the old
-      // last-append-only channel hid everything before the final delta.
-      // Falls back to the last-append channel if a run dies before the
-      // lifecycle log accumulates anything.
-      if (name.startsWith("q_dedup_")) {
-        val lc = graft.operators.DedupIndex.lastLifecyclePhases.get()
-        val ap = graft.operators.DedupIndex.lastAppendPhases.get()
-        if (lc.nonEmpty) phaseLog(name) = lc
-        else if (ap.nonEmpty) phaseLog(name) = ap
-      }
-      // The ANN deep tier's decomposition (last rep's): the one
-      // corpus-shaped job in its family, split so the sweep can ask
-      // WHICH phase scales instead of reading one opaque number.
-      if (name == "q_embed_ivfpq_retrain") {
-        val ph = graft.operators.PQIndexTx.lastOptimizePhases.get()
-        if (ph.nonEmpty) phaseLog(name) = ph.map { case (n, s) => ("opt_" + n, s) }
-      }
+      val spans = Trace.drain()
+      if (spans.nonEmpty) phaseLog(name) = spans
       if (ts.nonEmpty) Some(name -> ts) else None
     }
     def esc(s: String): String =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.InternalCheckpoint
 import org.apache.spark.storage.StorageLevel
 
+import graft.Trace
 import graft.sources.TxTable
 
 /** Persistent, INCREMENTALLY MAINTAINED text near-dup index: the
@@ -22,7 +23,7 @@ import graft.sources.TxTable
   * at 100 TB a crawl slice lands as a delta batch, and re-mining the
   * whole corpus per slice (what a session-scoped stage forces) is the
   * difference between an hourly ingest and an impossible one. The
-  * embedding twin is [[PQIndex.appendIVF]] (FAISS's add()/train()
+  * embedding twin is [[PQIndexTx.appendIVF]] (FAISS's add()/train()
   * split); this is the text side.
   *
   * Append-path parity with full recompute is EXACT, including the one
@@ -78,64 +79,6 @@ object DedupIndex {
     * itself by its low-bound seam test (which lowers the bound through
     * [[append]]'s `residueStripKeys` parameter — no mutable global). */
   private[operators] val ResidueStripKeys = 10000
-
-  /** Last [[append]]'s per-phase wall timings (seconds), as returned by
-    * the call — published so a harness (graft.Bench) can attach them to
-    * its artifact and the scale sweep can machine-check the flat
-    * job-and-commit floor against the delta-proportional phases per SF,
-    * instead of the split being hand-argued in round notes. */
-  val lastAppendPhases =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
-
-  /** Last [[optimizeIndex]]'s per-phase wall timings — same channel as
-    * [[lastAppendPhases]]: the deep tier is the one job in this family
-    * whose cost is legitimately corpus-shaped, so at scale the operator
-    * question is "WHICH phase — the groups re-derive, the re-mine, or
-    * the CC re-fold?"; decomposed here so bench.json and the scale
-    * sweep answer it per SF instead of a profiler. */
-  val lastOptimizePhases =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
-
-  /** WHOLE-LIFECYCLE phase log (cleared by the harness per query): the
-    * readmit/erase/optimize queries run several lifecycle calls per
-    * invocation (restore → erase → [compact] → append → append), and
-    * [[lastAppendPhases]] only survives the LAST append — this channel
-    * accumulates every call's decomposition in order, each append's
-    * phases prefixed `apN_` (N = call order) so bench.json shows where
-    * the seconds of the WHOLE lifecycle live, not just the final
-    * delta's. Entries are driver-side nanoTime spans, appended outside
-    * any timed Spark work. */
-  val lastLifecyclePhases =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
-
-  private def logLifecycle(name: String, sec: Double): Unit = {
-    // Sum repeats (e.g. a mid-append escape compaction plus a scheduled
-    // one in the same query): the bench serializes the log as a JSON
-    // map, where a duplicate key would shadow.
-    lastLifecyclePhases.updateAndGet { s =>
-      val i = s.indexWhere(_._1 == name)
-      if (i >= 0) s.updated(i, (name, s(i)._2 + sec)) else s :+ (name -> sec)
-    }
-    ()
-  }
-
-  private def timedLifecycle[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    logLifecycle(name, (System.nanoTime() - t0) / 1e9)
-    r
-  }
-
-  /** One append's phases into the lifecycle log under an `apN_` prefix;
-    * N counts prior appends by their unconditional trailing
-    * commit_harvest entry. */
-  private def logLifecycleAppend(phases: Seq[(String, Double)]): Unit = {
-    lastLifecyclePhases.updateAndGet { s =>
-      val n = s.count(_._1.endsWith("commit_harvest")) + 1
-      s ++ phases.map { case (p, v) => (s"ap${n}_$p", v) }
-    }
-    ()
-  }
 
   /** Default segment cap before [[append]] self-schedules compaction.
     * Every read folds all live segments ([[mergeSegments]]) and every
@@ -347,7 +290,7 @@ object DedupIndex {
   }
 
   def build(spark: SparkSession, docs: DataFrame, dir: String, cap: Int,
-            maxIter: Int = 20): Unit = timedLifecycle("build") {
+            maxIter: Int = 20): Unit = Trace.timed("build") {
     val d = docs.select(col("doc_id"), col("shs"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // doc_id blooms: the unique-index membership probe behind append's
@@ -452,22 +395,11 @@ object DedupIndex {
              txn: Option[(String, Long)] = None,
              txnExtra: Map[String, Long] = Map.empty,
              residueStripKeys: Int = ResidueStripKeys): Seq[(String, Double)] = {
-    // Per-phase wall timings (seconds), returned so the caller can tell
-    // the delta-proportional work (mine/recheck/fold) from fixed
-    // per-append overhead (stage writes, commit claims). Opt-in stderr
-    // dump via GRAFT_PHASE_TIMINGS=1.
-    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    // Commit-time metadata-harvest attribution: the footer/bloom work
-    // is INSIDE the stage/commit phases above it; publishing its exact
-    // total as a pseudo-phase (below) splits "manifest-planning write
-    // amplification" from the jobs proper without an env-gated A/B.
-    val harvestMark = TxTable.harvestNanos.get()
-    var mark = System.nanoTime()
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases += name -> (now - mark) / 1e9
-      mark = now
-    }
+    // Per-phase wall timings (seconds), returned and recorded in the
+    // Trace so the caller can tell the delta-proportional work
+    // (mine/recheck/fold) from fixed per-append overhead (stage
+    // writes, commit claims).
+    val clock = Trace.clock()
     // ONE PINNED evaluation of the delta (local checkpoint, not
     // best-effort persist): the staged docs segment, the dupe probe's
     // collected ids, and the preBloom filter below must all see the
@@ -511,22 +443,22 @@ object DedupIndex {
     // is JOINED right after the mine materializes, BEFORE the first
     // docs/pairs/components read (docsSnap below), so every consumer of
     // those tables still sees the folded state exactly as the
-    // sequential form did. If the mine aborts mid-flight the helper
-    // runs to completion detached — harmless by construction: the fold
-    // is content-transparent (masked rows were already invisible) and
-    // idempotent, the same state any crash inside the old sequential
-    // fold left behind.
-    val foldWallNanos = new java.util.concurrent.atomic.AtomicLong(0L)
+    // sequential form did. If the mine aborts mid-flight the fold is
+    // still SETTLED before the failure rethrows (the catch at the end
+    // of this method — Par.reap's settle-before-rethrow rule), so a
+    // crash-looping caller cannot stack detached folds on the same
+    // three tables.
     implicit val stagingEc: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val foldF =
       if (!collides) None
       else Some(scala.concurrent.Future {
-        val t0 = System.nanoTime()
-        Par.all(Seq("docs", "components", "pairs")
-          .map(t => () => TxTable.foldDeletes(spark, s"$dir/$t")))
-        foldWallNanos.set(System.nanoTime() - t0)
+        Trace.timed("collision_fold_wall") {
+          Par.all(Seq("docs", "components", "pairs")
+            .map(t => () => TxTable.foldDeletes(spark, s"$dir/$t")))
+        }
       })
+    try { // body continues unindented to the fold-settling catch at the end
     val deltaIdRows = deltaIdRows0 // pinned delta: the collision collect serves the probe too
     // INDEPENDENT prologue chains — the docs segment stage write (+ its
     // pre-computed Bloom) and the groups segment stage write below
@@ -558,7 +490,7 @@ object DedupIndex {
     }
     // Span covers the delta pin's materialization (the id collect) and
     // the collision probe, plus the background launches above.
-    phase("pin_delta_stage_docs")
+    clock.mark("pin_delta_stage_docs")
 
     // LSM-SHAPED index maintenance: the delta's own DF-capped groups
     // become a NEW SEGMENT of the `groups` table (one append-only
@@ -610,7 +542,7 @@ object DedupIndex {
         dgSeg.repartitionByRange(segFiles, col("sh"))
           .sortWithinPartitions(col("sh")))
     }
-    phase("stage_groups_segment")
+    clock.mark("stage_groups_segment")
 
     // The OLD-side and MERGED per-shingle views over the delta's
     // shingles in ONE aggregation: union the broadcast-semi-filtered
@@ -794,19 +726,17 @@ object DedupIndex {
     // docs_cand_fetch phase split — the verify job below fills the
     // docsCand cache on first touch at the same cost, minus the job
     // dispatch. The endpoint fetch now times inside verify_recheck.
-    phase("mine_candidates")
+    clock.mark("mine_candidates")
     // JOIN the overlapped collision fold before the first
     // docs/pairs/components read: everything below (dupe probe,
     // endpoint fetch, recheck, component fold, commits) sees the folded
     // tables exactly as the sequential form did. collision_fold_join is
-    // the residual tail not hidden under the mine; collision_fold_wall
-    // (pseudo-phase, like commit_harvest) is the fold's own wall time,
-    // an OVERLAP of mine_candidates, not an addition.
+    // the residual tail not hidden under the mine; the trace's
+    // collision_fold_wall span (like commit_harvest) is the fold's own
+    // wall time, an OVERLAP of mine_candidates, not an addition.
     foldF.foreach(f => scala.concurrent.Await.result(
       f, scala.concurrent.duration.Duration.Inf))
-    phase("collision_fold_join")
-    if (foldF.nonEmpty)
-      phases += "collision_fold_wall" -> foldWallNanos.get() / 1e9
+    clock.mark("collision_fold_join")
     val docsSnap = TxTable.snapshot(s"$dir/docs")
     val docsStored = TxTable.read(spark, s"$dir/docs", docsSnap)
     // Unique-key check via the manifest's doc_id BLOOM FILTERS: a Bloom
@@ -939,7 +869,7 @@ object DedupIndex {
     val (dropped, droppedRdd) = InternalCheckpoint.pin(spark, droppedPlan)
     (docsH, dropped, droppedRdd, droppedRdd.count())
     }
-    phase("verify_recheck")
+    clock.mark("verify_recheck")
     // Join the overlapped prologue chains. The dupe REQUIRE surfaces
     // here — still before any commit, so a duplicate delta aborts with
     // every table at its pre-append version exactly as before; only the
@@ -950,7 +880,7 @@ object DedupIndex {
       uGroupsF, scala.concurrent.duration.Duration.Inf)
     scala.concurrent.Await.result(
       dupeF, scala.concurrent.duration.Duration.Inf)
-    phase("stage_join")
+    clock.mark("stage_join")
     // A delta that mines no pairs and drops none — the common case for
     // a mostly-unique corpus slice — is a content NO-OP for pairs and
     // components: skip their staging and commits entirely. Committing
@@ -975,7 +905,7 @@ object DedupIndex {
         keepExisting = true, txnUpdate = txnMap)
       TxTable.commitStaged(spark, s"$dir/groups", uGroups, groupsSchema,
         keepExisting = true, txnUpdate = txnMap)
-      phase("commit_claims")
+      clock.mark("commit_claims")
     } else {
     // PAIRS, write = O(delta) on the common path: when no stored pair
     // lost candidacy (`dropped` empty — the usual append; a drop needs
@@ -999,7 +929,7 @@ object DedupIndex {
       TxTable.stage(s"$dir/pairs", pairsOut.coalesce(
         segmentFiles(if (pairsAppendOnly) newPairsCount else -1L, 2000000L)))
     }
-    phase("stage_pairs")
+    clock.mark("stage_pairs")
 
     // Component fold: only components touched by a new or dropped pair
     // are re-propagated (from their ACTUAL retained pairs — a dropped
@@ -1092,7 +1022,7 @@ object DedupIndex {
           componentsOut.schema, -1L, -1L, ocSnap)
       }
 
-    phase("fold_components")
+    clock.mark("fold_components")
     // EVERY table's new version is now fully materialized on disk;
     // visibility is four back-to-back atomic claims — the crash
     // window is the claims themselves, not the job pipeline above
@@ -1118,7 +1048,7 @@ object DedupIndex {
     stagedComponents.commit()
     TxTable.commitStaged(spark, s"$dir/groups", uGroups, groupsSchema,
       keepExisting = true, txnUpdate = txnMap)
-    phase("commit_claims")
+    clock.mark("commit_claims")
     if (edgesRdd != null) edgesRdd.unpersist(blocking = false)
     }
     droppedRdd.unpersist(blocking = false); docsH.unpersist()
@@ -1147,7 +1077,7 @@ object DedupIndex {
         if (s.dirs.size > autoCompactSegments) {
           TxTable.compactDirs(spark, s"$dir/$t", s,
             TxTable.levelZeroDirs(s"$dir/$t", s))(layout)
-          phase(s"auto_compact_$t")
+          clock.mark(s"auto_compact_$t")
         }
       }
       // Groups: mergeSegments is associative, so folding a SUBSET of
@@ -1167,17 +1097,11 @@ object DedupIndex {
       fold("components")(_.repartitionByRange(col("doc_id"))
         .sortWithinPartitions(col("doc_id")))
     }
-    // Pseudo-phase (wall-time OVERLAP of the phases above, not an
-    // addition): commit-time footer/bloom harvest across all staged
-    // tables this append touched.
-    phases += "commit_harvest" ->
-      (TxTable.harvestNanos.get() - harvestMark) / 1e9
-    if (sys.env.get("GRAFT_PHASE_TIMINGS").exists(Set("1", "2")))
-      System.err.println(phases.map { case (n, s) => f"$n=$s%.3fs" }
-        .mkString("DedupIndex.append phases: ", " ", ""))
-    lastAppendPhases.set(phases.toSeq)
-    logLifecycleAppend(phases.toSeq)
-    phases.toSeq
+    clock.phases
+    } catch { case t: Throwable =>
+      foldF.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
+      throw t
+    }
   }
 
   def pairs(spark: SparkSession, dir: String): DataFrame =
@@ -1239,7 +1163,7 @@ object DedupIndex {
     TxTable.txnVersion(s"$dir/groups", appId)
 
   def deleteDocsDeferred(dir: String, ids: Seq[Long]): Unit =
-      timedLifecycle("erase_tombstones") {
+      Trace.timed("erase_tombstones") {
     // Three INDEPENDENT tables' manifest commits — overlapped (§2.6);
     // the two pairs-table keys stay sequential on their shared manifest
     // (concurrent claims on one dir would just retry each other).
@@ -1325,7 +1249,7 @@ object DedupIndex {
     * under erasure, the df future appends mine against (see the purge
     * note below). Single-writer, like every compaction here. */
   def compactGroups(spark: SparkSession, dir: String, cap: Int): Unit =
-      timedLifecycle("compact_groups") {
+      Trace.timed("compact_groups") {
     val merged = mergeSegments(TxTable.read(spark, s"$dir/groups"), cap)
     // ERASURE PURGE: re-derive every rare group's membership against the
     // docs table — ids of erased documents (masked by an open
@@ -1443,13 +1367,7 @@ object DedupIndex {
     * discipline [[compact]] already assumes. */
   def optimizeIndex(spark: SparkSession, dir: String, cap: Int,
                     maxIter: Int = 20): Seq[(String, Double)] = {
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    var mark = System.nanoTime()
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases(name) = phases.getOrElse(name, 0.0) + (now - mark) / 1e9
-      mark = now
-    }
+    val clock = Trace.clock("opt_")
     var done = false
     while (!done) {
       // NO upfront physical mask fold (r18; was a Par.all foldDeletes
@@ -1504,7 +1422,7 @@ object DedupIndex {
         // rethrows into the outer re-plan catch).
         scala.concurrent.Await.result(groupsF,
           scala.concurrent.duration.Duration.Inf)
-        phase("groups_rederive_pair_mine")
+        clock.mark("groups_rederive_pair_mine")
         // Edges read at the snapshot THIS commit produced — a segment
         // appended right after it must not leak into this tier's fold.
         val pairEdges = TxTable.read(spark, s"$dir/pairs", pSnap)
@@ -1520,7 +1438,7 @@ object DedupIndex {
           comps.repartitionByRange(col("doc_id"))
             .sortWithinPartitions(col("doc_id")),
           snaps("components"))
-        phase("cc_refold")
+        clock.mark("cc_refold")
         optimizeLateRaceHookForTest()
         // Docs itself only re-clusters (the fold above may have landed
         // key-clustered rewrite dirs off the doc_id range layout) —
@@ -1530,7 +1448,7 @@ object DedupIndex {
         TxTable.commit(spark, s"$dir/docs",
           d.repartitionByRange(col("doc_id")).sortWithinPartitions(col("doc_id")),
           snaps("docs"))
-        phase("docs_recluster")
+        clock.mark("docs_recluster")
         done = true
       } catch { case _: TxTable.ConcurrentCommitException =>
         // A writer landed since planning: re-plan so its rows join the
@@ -1538,13 +1456,10 @@ object DedupIndex {
         // equal-or-stale-derived content and are rewritten again from
         // the fresh ledger — nothing is lost, the retry pays one more
         // corpus pass (contention in a scheduled window is rare).
-        phase("replan_lost_race")
+        clock.mark("replan_lost_race")
       } finally { grouped.unpersist(); d.unpersist(); () }
     }
-    lastOptimizePhases.set(phases.toSeq)
-    lastLifecyclePhases.updateAndGet(
-      _ ++ phases.toSeq.map { case (n, s) => (s"opt_$n", s) })
-    phases.toSeq
+    clock.phases
   }
 
   /** Test-only interleave points (the [[PQIndexTx.optimizeRaceHookForTest]]
@@ -1575,7 +1490,7 @@ object DedupIndex {
     * for tables already there). Data committed after the mark stays on
     * disk until TxTable.vacuum — pinned readers are never broken. */
   def restoreBase(spark: SparkSession, dir: String): Unit =
-      timedLifecycle("restore") {
+      Trace.timed("restore") {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     val versions = org.json4s.jackson.JsonMethods
       .parse(java.nio.file.Files.readString(basePath(dir)))

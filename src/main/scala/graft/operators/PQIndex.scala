@@ -105,41 +105,6 @@ object PQIndex {
         s"${VectorOps.nearestCentroid(KMeans.literal(coarse), "e", "nsq")}.cl AS cell",
         s"${PQ.encodeExpr(cbs, "e", dsub)} AS codes")
 
-  /** Incremental index maintenance: encode NEW corpus vectors with the
-    * STORED quantizers (coarse centroids + codebooks — training is not
-    * repeated) and append their codes into the cell-partitioned table.
-    * This is how a streaming 100 TB deployment keeps the index current:
-    * appends cost one encode pass over the delta, searches see the new
-    * vectors immediately via the same partition-pruned scan, and the
-    * quantizers are retrained only when drift warrants a full rebuild
-    * (FAISS's add() vs train() split). Parquet append to a partitioned
-    * table only touches the delta's cell directories.
-    *
-    * Contract: `vecs` is CORPUS-ONLY — rows with `vec_id < nq` (the
-    * family's query-id convention, the same ids `buildIVF` excludes)
-    * are filtered out so an unfiltered delta cannot silently pollute
-    * the serving index with query vectors; and delta vec_ids must be
-    * unseen — parquet append has no key constraint, so a double-append
-    * is checked here (a delta-broadcast semi-join against stored ids,
-    * the price every keyed store pays on insert).
-    */
-  def appendIVF(spark: SparkSession, vecs: DataFrame, dir: String,
-                dsub: Int, nq: Int = 0): Unit = {
-    val coarse = loadCoarse(spark, dir)
-    val cbs = loadCodebooks(spark, dir)
-    val delta = vecs.select(col("vec_id"), col("e"))
-      .filter(col("vec_id") >= nq)
-    val dupes = spark.read.parquet(s"$dir/codes").select(col("vec_id"))
-      .join(broadcast(delta.select(col("vec_id"))), Seq("vec_id"), "left_semi")
-      .count()
-    require(dupes == 0L,
-      s"appendIVF: $dupes delta vec_ids already encoded in $dir/codes")
-    encodedIVF(
-      delta.selectExpr("vec_id", "e", s"${VectorOps.normSq("e")} AS nsq"),
-      coarse, cbs, dsub, nq)
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-  }
-
   private[operators] def loadCoarse(spark: SparkSession, dir: String): Seq[KMeans.Cent] =
     loadCoarseAt(spark, s"$dir/coarse")
 

@@ -3,6 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Trace
 import graft.sources.TxTable
 
 /** [[PQIndex]]'s IVF-PQ serving index with the codes table on
@@ -15,9 +16,9 @@ import graft.sources.TxTable
   *     mid-append leaves torn files every later search half-reads.
   *     Here a delta is one manifest claim — readers hold their
   *     snapshot, a failed append is invisible.
-  *   - An O(hit-files) dupe probe. [[PQIndex.appendIVF]]'s keyed-insert
-  *     check scans the ENTIRE codes table per delta — the exact
-  *     corpus-proportional read the dedup index's append just shed.
+  *   - An O(hit-files) dupe probe. A keyed-insert check that scans
+  *     the ENTIRE codes table per delta is the exact
+  *     corpus-proportional read the dedup index's append shed.
   *     Here the delta's ids refine per-dir vec_id Bloom sidecars, then
   *     prune by manifest stats ([[TxTable.lookupKeys]]); a typical
   *     all-new batch proves itself fresh with ZERO stored-file reads.
@@ -71,13 +72,6 @@ object PQIndexTx {
     (PQIndex.loadCoarseAt(spark, cp), PQIndex.loadCodebooksAt(spark, bp))
   }
 
-  /** Last [[optimizeIndex]]'s per-phase wall timings (seconds) — same
-    * publication channel as [[DedupIndex.lastAppendPhases]]: graft.Bench
-    * attaches them to its artifact so the scale sweep can decompose the
-    * retrain tier's cost per SF instead of reading one opaque number. */
-  val lastOptimizePhases =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
-
   /** Test-only interleave points (the [[TxTable.checkpointGateForTest]]
     * convention): run between an operation's planning and its commit so
     * a spec can land a CONCURRENT writer deterministically in the race
@@ -126,11 +120,10 @@ object PQIndexTx {
     * not repeated — FAISS's add() vs train() split), as one atomic
     * delta commit. The double-append guard reads O(hit files): delta
     * ids within [[MaxProbeKeys]] probe the table's Bloom sidecars and
-    * manifest stats instead of scanning the stored codes ([[PQIndex
-    * .appendIVF]]'s shape — and its fallback here for over-bound
-    * deltas). Probe and append pin ONE evaluation of `vecs` (local
-    * checkpoint), so a nondeterministic delta can't pass the probe
-    * with one row set and land another. Optimistic against racing
+    * manifest stats instead of scanning the stored codes (the
+    * fallback here for over-bound deltas). Probe and append pin ONE
+    * evaluation of `vecs` (local checkpoint), so a nondeterministic
+    * delta can't pass the probe with one row set and land another. Optimistic against racing
     * commits: the delta commit claims exactly the PROBED snapshot's
     * successor, and a lost race re-probes against the fresh snapshot
     * before re-claiming — concurrent appenders of the same vec_id
@@ -459,8 +452,8 @@ object PQIndexTx {
     *     across the retrain; RESTORE rolls epoch and codes back
     *     together, reviving the matching old quantizers.
     *
-    * Returns per-phase wall timings (also published via
-    * [[lastOptimizePhases]] for the bench/sweep artifacts): `plan`
+    * Returns per-phase wall timings (also recorded in [[graft.Trace]]
+    * under an `opt_` prefix for the bench/sweep artifacts): `plan`
     * (live-id read + coverage check), `train` (coarse + PQ Lloyd
     * fits), `encode_commit` (re-encode, cluster, manifest claim),
     * plus `replan_lost_race` time when contended. */
@@ -469,13 +462,7 @@ object PQIndexTx {
                     coarseK: Int, coarseIters: Int, files: Int = 0)
       : Seq[(String, Double)] = {
     val cd = codesDir(dir)
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    var mark = System.nanoTime()
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases(name) = phases.getOrElse(name, 0.0) + (now - mark) / 1e9
-      mark = now
-    }
+    val clock = Trace.clock("opt_")
     var done = false
     while (!done) {
       val snap = TxTable.snapshot(cd)
@@ -501,10 +488,10 @@ object PQIndexTx {
         require(nCorpus == nLive,
           s"optimizeIndex: vector source covers $nCorpus of $nLive live " +
             s"ids in $cd — retraining would silently drop the uncovered vectors")
-        phase("plan")
+        clock.mark("plan")
         val (coarse, cbs) = PQIndex.trainIVFAt(spark, v, cp, bp,
           m, dsub, ksub, iters, coarseK, coarseIters)
-        phase("train")
+        clock.mark("train")
         // Pin the re-encode (see appendImpl): the clustered write's
         // range-sampling pass must not evaluate the whole-corpus encode
         // expression a second time.
@@ -515,19 +502,18 @@ object PQIndexTx {
         try {
           TxTable.commit(spark, cd, enc, snap,
             txnUpdate = Map(QuantEpochKey -> epoch))
-          phase("encode_commit")
+          clock.mark("encode_commit")
           done = true
         } catch { case _: TxTable.ConcurrentCommitException =>
           // A writer landed since planning: re-plan from the fresh
           // snapshot so its rows join the retrain. Loses nothing —
           // contention in a scheduled window is rare, and each retry
           // pays one retrain, never silent clobber.
-          phase("replan_lost_race")
+          clock.mark("replan_lost_race")
         } finally encRdd.unpersist(blocking = false)
       } finally v.unpersist()
     }
-    lastOptimizePhases.set(phases.toSeq)
-    phases.toSeq
+    clock.phases
   }
 
   private def basePath(dir: String) = java.nio.file.Paths.get(dir, "BASE_VERSION")

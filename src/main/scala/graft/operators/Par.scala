@@ -16,9 +16,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * on either side rethrows to the caller.
   *
   * Failure hygiene: every helper thunk runs under its own JOB GROUP
-  * (set thread-locally on the pool thread, cleared in a finally). When
-  * the CALLER-side thunk throws, the helpers' groups are CANCELLED and
-  * the helper futures AWAITED before the failure rethrows — a
+  * (set thread-locally on the pool thread; the thread's prior group is
+  * restored in a finally). When the CALLER-side thunk throws, the
+  * helpers' groups are CANCELLED and the helper futures AWAITED
+  * before the failure rethrows — a
   * crash-looping caller can no longer stack detached helper jobs in
   * the shared scheduler (each call settles fully, success or failure,
   * before returning). Cancellation is cooperative (Spark kills the
@@ -33,15 +34,23 @@ object Par {
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sparkContext)
 
+  /** The local properties `setJobGroup` writes. */
+  private val GroupProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
   /** Run `thunk` on the current (pool) thread under job group `gid`,
-    * clearing the group after — pool threads are reused, so a leaked
-    * group id would mislabel (and make cancellable) unrelated later
-    * jobs submitted from the same thread. */
-  private def inGroup[A](gid: String)(thunk: => A): A =
+    * then restore the thread's PRIOR group (id, description, interrupt
+    * flag) — pool threads are reused, so a leaked group id would
+    * mislabel (and make cancellable) unrelated later jobs submitted
+    * from the same thread, and clearing instead of restoring would drop
+    * an enclosing group (a nested Par call, a caller-set group) that
+    * an outer cancel relies on. */
+  private[operators] def inGroup[A](gid: String)(thunk: => A): A =
     sparkContext match {
       case Some(sc) =>
+        val prior = GroupProps.map(k => k -> sc.getLocalProperty(k))
         sc.setJobGroup(gid, s"Par helper $gid", interruptOnCancel = false)
-        try thunk finally sc.clearJobGroup()
+        try thunk finally prior.foreach { case (k, v) => sc.setLocalProperty(k, v) }
       case None => thunk
     }
 

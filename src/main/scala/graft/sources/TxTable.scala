@@ -577,16 +577,6 @@ object TxTable {
       case _ => Map.empty
     }
 
-  /** Cumulative wall nanos this process has spent in COMMIT-TIME
-    * metadata harvest — [[statsFor]]'s footer opens plus
-    * [[harvestBlooms]]' data passes. This is the write-amplification
-    * side of the manifest-planning trade (write-time work buying
-    * read-time pruning), exposed as a counter so a profiling run can
-    * ATTRIBUTE an append's cost to the harvest without disabling it
-    * (DedupIndex.append publishes the per-append delta as a
-    * `commit_harvest` pseudo-phase). */
-  val harvestNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Cumulative MANIFEST bytes this process has claimed (commit files
     * only — checkpoints are amortized derived data and tracked in
     * [[checkpointBytes]]). The write-amplification telemetry for the
@@ -600,20 +590,13 @@ object TxTable {
     * full-state serialization — O(table)/N amortized per commit). */
   val checkpointBytes = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Profiling A/B gate: `GRAFT_NO_COMMIT_HARVEST=1` skips the footer
-    * stats/nonull harvest and the bloom data pass (caller-provided
-    * [[preBloom]] sidecars still register — they cost nothing here).
-    * CORRECTNESS is unaffected — stats, blooms, and null proofs are
-    * optimizations with conservative fallbacks at every consumer — but
-    * reads lose manifest pruning, so this is a measurement instrument,
-    * never a production setting. */
-  private val noCommitHarvest =
-    sys.env.get("GRAFT_NO_COMMIT_HARVEST").contains("1")
-
-  private def timedHarvest[T](body: => T): T = {
-    val t0 = System.nanoTime()
-    try body finally harvestNanos.addAndGet(System.nanoTime() - t0)
-  }
+  /** COMMIT-TIME metadata harvest — [[statsFor]]'s footer opens plus
+    * [[harvestBlooms]]' data passes — recorded as the `commit_harvest`
+    * trace span: the write-amplification side of the manifest-planning
+    * trade (write-time work buying read-time pruning), attributed
+    * without disabling it. */
+  private def timedHarvest[T](body: => T): T =
+    graft.Trace.timed("commit_harvest")(body)
 
   /** Write-time stats harvest for a just-staged data directory: per-file
     * (min, max) of every top-level LongType/TimestampType column, read
@@ -625,8 +608,6 @@ object TxTable {
       : (Map[String, Map[String, (Long, Long)]],
          Map[String, Map[String, (String, String)]],
          Map[String, Seq[String]]) = timedHarvest {
-    if (noCommitHarvest)
-      return (Map.empty, Map.empty, Map.empty)
     val longCols = schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.LongType ||
                 f.dataType == org.apache.spark.sql.types.TimestampType ||
@@ -712,7 +693,7 @@ object TxTable {
     // data pass.
     val (pre, todo) = cols.partition(c => Files.exists(bloomPath(dir, uuid, c)))
     val listing = if (pre.isEmpty) Map.empty[String, Seq[String]] else Map(uuid -> pre)
-    if (todo.isEmpty || noCommitHarvest) return listing
+    if (todo.isEmpty) return listing
     val rows = stagedRowCount(dir, uuid)
     if (rows > MaxBloomItems) return listing
     Files.createDirectories(indexDir(dir))

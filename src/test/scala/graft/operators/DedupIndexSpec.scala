@@ -363,6 +363,33 @@ class DedupIndexSpec extends SparkSpec {
     spark.sharedState.cacheManager.clearCache()
   }
 
+  test("an append failing mid-mine settles its collision fold before rethrowing") {
+    import graft.sources.TxTable
+    val dir = tmp()
+    DedupIndex.build(spark, df(base), dir, Cap)
+    // Re-adding erased doc 4 collides with its open tombstone, so the
+    // append launches the background mask fold over docs, components
+    // and pairs; the mine then fails on its groups reads (the groups
+    // data root swapped for a plain file).
+    DedupIndex.deleteDocsDeferred(dir, Seq(4L))
+    val readd = base.filter(_._1 == 4L)
+    val groupsData = java.nio.file.Paths.get(s"$dir/groups/data")
+    val aside = java.nio.file.Paths.get(s"$dir/groups/data_aside")
+    Files.move(groupsData, aside)
+    Files.writeString(groupsData, "not a directory")
+    try intercept[Exception] { DedupIndex.append(spark, df(readd), dir, Cap) }
+    finally { Files.delete(groupsData); Files.move(aside, groupsData) }
+    // The fold had finished by the time the failure surfaced: no
+    // standing mask is left on any of the three tables it folds.
+    Seq("docs", "components", "pairs").foreach { t =>
+      assert(TxTable.snapshot(s"$dir/$t").dkeys.isEmpty,
+        s"$t still masked: the append rethrew before its fold settled")
+    }
+    DedupIndex.append(spark, df(readd), dir, Cap)
+    assertParity(dir, base)
+    spark.sharedState.cacheManager.clearCache()
+  }
+
   test("append self-schedules compaction past the segment cap") {
     import graft.sources.TxTable
     val dir = tmp()

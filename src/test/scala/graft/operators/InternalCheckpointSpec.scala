@@ -48,7 +48,8 @@ class InternalCheckpointSpec extends SparkSpec {
         assert(p2.count() == 5L)
       } finally r2.unpersist(blocking = true)
       assert(pinned.count() == 10L)
-      before.foreach(b => assert(established.contains(b) || true)) // informational
+      // An existing dir is never replaced, not even by the first call.
+      if (before.isDefined) assert(established == before)
     } finally rdd.unpersist(blocking = true)
   }
 }

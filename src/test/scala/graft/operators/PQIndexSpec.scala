@@ -47,49 +47,6 @@ class PQIndexSpec extends SparkSpec {
       "cell-partitioned index search diverged from the inline IVF-PQ pipeline")
   }
 
-  test("incremental append with stored quantizers equals the all-at-once build") {
-    // Same TRAINING input both ways (buildIVF trains on all of `vecs`
-    // regardless of nq), different ENCODE paths: index A encodes only
-    // vec_id >= 300 at build and appends 5..299 later with the STORED
-    // quantizers; index B encodes everything at build. Identical
-    // quantizers ⇒ the codes tables and every search must agree — the
-    // invariant that makes streaming index maintenance (encode the
-    // delta, never retrain per batch) correct.
-    val t = Tables(spark, SparkSpec.Sf0001)
-    val vecs = t.embeddings
-      .selectExpr("vec_id", "CAST(embedding AS array<double>) AS e")
-      .persist()
-    val dirA = java.nio.file.Files.createTempDirectory("graft_pqa").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_pqb").toString
-    PQIndex.buildIVF(spark, vecs, dirA, m = 8, dsub = 8, ksub = 8, iters = 2,
-      nq = 300, coarseK = 8, coarseIters = 3)
-    // UNFILTERED delta slice: appendIVF's nq gate must drop the query
-    // ids (vec_id < 5) itself — the corpus-only contract is enforced in
-    // the operator, not left to caller hygiene.
-    PQIndex.appendIVF(spark,
-      vecs.filter(col("vec_id") < 300), dirA, dsub = 8, nq = 5)
-    // Double-append of already-encoded ids must refuse, not silently
-    // duplicate (parquet append has no key constraint to catch it).
-    val dup = intercept[IllegalArgumentException] {
-      PQIndex.appendIVF(spark,
-        vecs.filter(col("vec_id") >= 5 && col("vec_id") < 10), dirA, dsub = 8)
-    }
-    assert(dup.getMessage.contains("already encoded"))
-    PQIndex.buildIVF(spark, vecs, dirB, m = 8, dsub = 8, ksub = 8, iters = 2,
-      nq = 5, coarseK = 8, coarseIters = 3)
-    def codes(d: String) = spark.read.parquet(s"$d/codes")
-      .selectExpr("vec_id", "CAST(cell AS BIGINT) AS cell", "codes")
-      .orderBy("vec_id").collect().toSeq.map(_.toSeq)
-    assert(codes(dirA) === codes(dirB),
-      "appended codes diverged from the all-at-once encode")
-    def search(d: String) = PQIndex.searchIVF(spark, d,
-        vecs.filter(col("vec_id") < 5), rerankVecs = vecs,
-        dsub = 8, nprobe = 2, shortlist = 40, topK = 5)
-      .collect().toSeq.map(_.toSeq)
-    assert(search(dirA) === search(dirB),
-      "search on the appended index diverged")
-  }
-
   test("codebooks survive the parquet round-trip bit-exactly") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pqi2").toString
     val t = Tables(spark, SparkSpec.Sf0001)

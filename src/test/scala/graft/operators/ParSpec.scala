@@ -70,6 +70,21 @@ class ParSpec extends SparkSpec {
     assert(Par.all(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
   }
 
+  test("par2 and inGroup keep an enclosing job group") {
+    val sc = spark.sparkContext
+    def group = (sc.getLocalProperty("spark.jobGroup.id"),
+      sc.getLocalProperty("spark.job.description"))
+    sc.setJobGroup("outer", "outer work", interruptOnCancel = false)
+    try {
+      Par.par2(spark.range(10).count())(spark.range(10).count())
+      assert(group == ("outer", "outer work"), "par2 dropped the caller's job group")
+      // A helper that runs on a thread already carrying a group (a
+      // nested Par call, a caller-set group) hands that group back.
+      Par.inGroup("inner")(assert(group._1 == "inner"))
+      assert(group == ("outer", "outer work"), "inGroup cleared the enclosing job group")
+    } finally sc.clearJobGroup()
+  }
+
   test("helper job group never leaks onto reused pool threads") {
     // Run a Par call, then submit a plain job from the pool: if the
     // group leaked, cancelling the stale gid would kill it.

@@ -35,12 +35,23 @@ THRESHOLD = 30.0
 # Overhead-dominated queries: below this absolute time at the larger SF,
 # ratios measure fixed costs, not asymptotics.
 MIN_SECONDS = 1.5
-# Same gate for DedupIndex.append phases: a phase is delta-bounded when
-# its sf0.01 -> sf0.1 growth stays within the delta's own 10x growth
-# (plus the same 3x host-noise slack as the query gate); tiny phases are
-# commit/scheduler floor, not asymptotics.
+# Same gate for the per-query trace spans (bench.json `phases`): a phase
+# is delta-bounded when its sf0.01 -> sf0.1 growth stays within the
+# delta's own 10x growth (plus the same 3x host-noise slack as the query
+# gate); tiny phases are commit/scheduler floor, not asymptotics.
 PHASE_THRESHOLD = 30.0
 PHASE_MIN_SECONDS = 1.0
+# Lifecycle queries whose decomposition the phase gate relies on: each
+# must carry phases at every SF, or the gate would pass vacuously.
+PHASED_QUERIES = (
+    "q_dedup_incremental",
+    "q_dedup_index_append",
+    "q_dedup_erase_append",
+    "q_dedup_readmit",
+    "q_dedup_readmit_optimized",
+    "q_dedup_optimize_full",
+    "q_embed_ivfpq_retrain",
+)
 EXEMPT_PREFIXES = (
     "q_graph_shortest_path",   # bounded-depth BFS: frontier iterations grow with diameter
     "q_dedup_components",      # min-label propagation: iterations grow with component size
@@ -118,6 +129,10 @@ def main() -> int:
     # Each phase must grow no faster than the delta itself (10x data per
     # SF step, same 3x slack) once it is past the fixed commit floor.
     phase_flags = []
+    for q in PHASED_QUERIES:
+        for sf in SFS:
+            if not runs[sf].get("phases", {}).get(q):
+                failures.append((q, f"no phases at {sf}"))
     lo_sf, hi_sf = SFS[1], SFS[2]
     for q, ph_hi in runs[hi_sf].get("phases", {}).items():
         ph_lo = runs[lo_sf].get("phases", {}).get(q, {})
@@ -142,8 +157,8 @@ def main() -> int:
         "totals_sec": {sf: round(runs[sf]["value"], 1) for sf in SFS},
         "queries": report,
         "failures": [f"{q}: {why}" for q, why in failures],
-        # DedupIndex.append per-phase seconds at each SF (from bench.json):
-        # the exempt lifecycle queries' flat job-and-commit floor vs
+        # Per-query trace spans at each SF (bench.json `phases`): the
+        # exempt lifecycle queries' flat job-and-commit floor vs
         # delta-proportional phases, machine-recorded instead of
         # hand-argued. A phase growing ~linearly with SF here is the
         # data-driven work; one that stays flat is per-append overhead.
@@ -157,8 +172,9 @@ def main() -> int:
         json.dump(artifact, f, indent=1, sort_keys=True)
     print(f"totals: {artifact['totals_sec']}")
     for q, why in failures:
-        print(f"SUPER-LINEAR {q}: {why}")
-    print(f"== {len(queries) - len(failures)}/{len(queries)} within linear-growth bound ==")
+        print(f"FAIL {q}: {why}")
+    failed = {q for q, _ in failures}
+    print(f"== {len(queries) - len(failed)}/{len(queries)} within linear-growth bound ==")
     return 1 if failures else 0
 
 
