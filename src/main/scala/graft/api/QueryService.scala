@@ -53,11 +53,16 @@ object QueryService {
     * from the pre-aggregated summary collection, fall back to the base
     * collection when the summary row is absent, 404 when both miss).
     *
-    * Both probes are point predicates on the key — partition/file-
-    * prunable scans plus one collect of ≤1 row at the API boundary,
-    * never a scan of the world. The fallback recomputes the summary
-    * columns for JUST that key, so a stale/incomplete summary store
-    * degrades to correct-but-slower instead of wrong.
+    * Both probes are point predicates on the key plus one collect of
+    * ≤1 row at the API boundary, never a scan of the world. A summary
+    * from `TxTable.lookupKeys` whose pruned files hold at most
+    * `TxTable.DriverLookupBytes` (256 KiB) on disk is already a local
+    * relation read on the driver, so a summary hit folds in Catalyst
+    * and starts zero Spark jobs; a miss, or a bigger pruned set, runs
+    * as jobs. The
+    * fallback recomputes the summary columns for JUST that key, so a
+    * stale/incomplete summary store degrades to correct-but-slower
+    * instead of wrong.
     */
   def lookupWithFallback(summary: DataFrame, keyCol: String, key: Long)
                         (fallback: => DataFrame): Option[Row] = {

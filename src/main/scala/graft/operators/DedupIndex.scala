@@ -759,14 +759,15 @@ object DedupIndex {
       val dupes = bloomSuspects match {
         case Some(Nil) => 0L
         case Some(suspects) if suspects.length <= 1000 =>
-          // Manifest-planned point probe (TxTable.lookupKeys): doc_id
-          // stats pruning drops every file whose range excludes all
-          // suspects, so the exact probe reads O(hit files), not the
-          // corpus — docs is doc_id-range-clustered by build/compact, so
-          // hit files ∝ suspects. The IN filter still pushes into the
-          // survivors for row-group skipping.
-          TxTable.lookupKeys(spark, s"$dir/docs", "doc_id", suspects,
-            Some(docsSnap)).select(col("doc_id")).count()
+          // Manifest-planned point probe (TxTable.lookupFiles, read by
+          // TxTable.scanKeys): doc_id stats pruning drops every file
+          // whose range excludes all suspects, so the exact probe reads
+          // O(hit files), not the corpus — docs is doc_id-range-clustered
+          // by build/compact, so hit files ∝ suspects. The IN filter
+          // still pushes into the survivors for row-group skipping.
+          TxTable.scanKeys(spark, docsSnap, "doc_id", suspects,
+            TxTable.lookupFiles(s"$dir/docs", docsSnap, "doc_id", suspects))
+            .select(col("doc_id")).count()
         case _ =>
           docsStored.select(col("doc_id"))
             .join(broadcast(newIds), Seq("doc_id"), "left_semi").count()

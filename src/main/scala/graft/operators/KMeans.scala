@@ -60,7 +60,7 @@ object KMeans {
     * when determinism can be relaxed). `vecs` must carry
     * (vec_id, e: array<double>, nsq). */
   def seed(vecs: DataFrame, k: Int): Seq[Cent] =
-    toCents(vecs.filter(col("vec_id") < k)
+    toCents(vecs.orderBy(col("vec_id")).limit(k)
       .selectExpr("vec_id AS cl", "e AS c", "nsq AS cnsq")
       .collect())
 

@@ -65,9 +65,10 @@ object PQ {
       .selectExpr("vec_id", s"explode($subRows) AS se")
       .selectExpr("vec_id", "se.s AS s", "se.e AS e")
     // Seeds: the k smallest vec_ids per subspace (same rule as
-    // KMeans.seed, one collect for all m blocks).
+    // KMeans.seed, one collect for all m blocks): every vec_id has one
+    // row per subspace, so they are the ksub·m smallest (vec_id, s).
     var cbs: Seq[Seq[KMeans.Cent]] = {
-      val rows = sub.filter(col("vec_id") < ksub)
+      val rows = sub.orderBy(col("vec_id"), col("s")).limit(ksub * m)
         .selectExpr("s", "vec_id AS cl", "e AS c", s"${VectorOps.normSq("e")} AS cnsq")
         .collect()
       (0 until m).map(s => rows.filter(_.getInt(0) == s)

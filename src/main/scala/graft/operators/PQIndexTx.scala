@@ -20,8 +20,9 @@ import graft.sources.TxTable
   *     the ENTIRE codes table per delta is the exact
   *     corpus-proportional read the dedup index's append shed.
   *     Here the delta's ids refine per-dir vec_id Bloom sidecars, then
-  *     prune by manifest stats ([[TxTable.lookupKeys]]); a typical
-  *     all-new batch proves itself fresh with ZERO stored-file reads.
+  *     prune by manifest stats ([[TxTable.lookupFiles]], read by
+  *     [[TxTable.scanKeys]]); a typical all-new batch proves itself
+  *     fresh with ZERO stored-file reads.
   *   - Probed-cell pruning WITHOUT partition directories. Codes are
   *     range-clustered by (cell, vec_id), so per-file cell bounds in
   *     the manifest make `cell IN probes` skip files exactly as
@@ -231,8 +232,11 @@ object PQIndexTx {
                 .join(broadcast(delta.select(col("vec_id"))), Seq("vec_id"), "left_semi")
                 .count()
             else if (idRows.isEmpty) 0L
-            else TxTable.lookupKeys(spark, cd, "vec_id",
-              idRows.toSeq.map(_.getLong(0)), Some(snap)).count()
+            else {
+              val ids = idRows.toSeq.map(_.getLong(0))
+              TxTable.scanKeys(spark, snap, "vec_id", ids,
+                TxTable.lookupFiles(cd, snap, "vec_id", ids)).count()
+            }
           require(dupes == 0L,
             s"appendIVF: $dupes delta vec_ids already encoded in $cd")
           appendRaceHookForTest()
@@ -280,8 +284,9 @@ object PQIndexTx {
 
   /** Same search plan as [[PQIndex.searchIVF]]; the codes scan reads
     * only the files whose manifest (cell, …) bounds intersect the
-    * probed cells — [[TxTable.lookupKeys]] on the cell column, the
-    * stats twin of the Hive layout's PartitionFilters. Quantizers and
+    * probed cells — [[TxTable.lookupFiles]] and [[TxTable.scanKeys]]
+    * on the cell column, the stats twin of the Hive layout's
+    * PartitionFilters. Quantizers and
     * codes resolve from ONE snapshot: the manifest's epoch key names
     * the quantizer dirs that encoded exactly this snapshot's codes, so
     * a concurrent [[optimizeIndex]] flips a search atomically from
@@ -294,7 +299,8 @@ object PQIndexTx {
     val (coarse, cbs) = loadQuant(spark, dir, quantEpoch(snap))
     PQIndex.ivfSearchImpl(spark, queries, rerankVecs, dsub, nprobe,
       shortlist, topK, coarse, cbs) { allCells =>
-      TxTable.lookupKeys(spark, cd, "cell", allCells, Some(snap))
+      TxTable.scanKeys(spark, snap, "cell", allCells,
+        TxTable.lookupFiles(cd, snap, "cell", allCells))
     }
   }
 

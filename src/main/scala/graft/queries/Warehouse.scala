@@ -600,8 +600,10 @@ object Warehouse {
     // interval, UTF-8 bounds in the manifest sstats, a name Bloom per
     // data dir), then TxTable.lookupStringKeys plans the probe from
     // the MANIFEST alone — absent keys die on the Bloom (zero I/O),
-    // present keys prune to the files whose bounds cover them, and the
-    // IN predicate pushes into those files' row groups. The probed
+    // present keys prune to the files whose bounds cover them, and
+    // those few small files are read on the driver (zero Spark jobs;
+    // past TxTable.DriverLookupBytes the IN predicate pushes into their
+    // row groups instead). The probed
     // names resolve from fixed custkeys so the oracle can replay the
     // same keys; the two literal probes exercise the absence path.
     QueryDef(
@@ -645,10 +647,11 @@ object Warehouse {
     // same way: a custkey-keyed summary TxTable (range-clustered, with
     // a custkey Bloom per data dir), probed through TxTable.lookupKeys
     // — Bloom absence proof (the two absent probes cost zero I/O),
-    // numeric `stats` file pruning, then the IN pushed into the
-    // surviving files' row groups. This is the surface the dedup
-    // append's dupe probe and endpoint fetch plan through, gated here
-    // at query granularity rather than only in specs.
+    // numeric `stats` file pruning, then the surviving files read on
+    // the driver (or, past TxTable.DriverLookupBytes, scanned with the
+    // IN pushed into their row groups). Its planning (TxTable.lookupFiles)
+    // is the one the dedup append's dupe probe and endpoint fetch use,
+    // gated here at query granularity rather than only in specs.
     QueryDef(
       "q_tx_point_lookup_long",
       t => {

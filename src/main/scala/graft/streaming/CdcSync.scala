@@ -193,6 +193,13 @@ object CdcSync {
           val insIds = inserts.select(col("doc_id")).collect()
             .map(_.getLong(0)).toSeq
           val nonEmptyBatch = insIds.nonEmpty || delIds.nonEmpty
+          // How many of `ids` are live in docs (a manifest-planned count).
+          def liveCount(ids: Seq[Long]): Long = {
+            val docs = s"$indexDir/docs"
+            val snap = TxTable.snapshot(docs)
+            TxTable.scanKeys(spark, snap, "doc_id", ids,
+              TxTable.lookupFiles(docs, snap, "doc_id", ids)).count()
+          }
           if (dCovOpt.exists(_ > gCov) && nonEmptyBatch) {
             // Crash window, ANY writer's: docs sealed source versions
             // through dCov but groups only through gCov — the append
@@ -214,8 +221,7 @@ object CdcSync {
                 "(DedupIndex.deleteDocsDeferred) — then re-seed from the " +
                 "index's build version.")
             val live = if (insIds.isEmpty) 0L
-              else TxTable.lookupKeys(spark, s"$indexDir/docs", "doc_id",
-                insIds).count()
+              else liveCount(insIds)
             require(live == 0L,
               s"docs CDC batch $batchId: a previous append crashed between " +
                 s"claims (docs covers source v$dCov, groups only v$gCov) — " +
@@ -233,8 +239,7 @@ object CdcSync {
             val probe = insIds.filterNot(delSet)
             val pre =
               if (probe.isEmpty) 0L
-              else TxTable.lookupKeys(spark, s"$indexDir/docs", "doc_id",
-                probe).count()
+              else liveCount(probe)
             val landed = probe.nonEmpty && pre == probe.size &&
               dCovOpt.isEmpty // a crash never counts as landed
             if (!landed) require(pre == 0L,

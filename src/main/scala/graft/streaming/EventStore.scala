@@ -96,7 +96,8 @@ final class EventStore(root: String) {
     * half of INSERT IGNORE. The present-key read is MANIFEST-PLANNED
     * for long/string keys within the driver bound: the batch's keys
     * refine per-dir through the table's Bloom sidecars and prune by
-    * stats bounds ([[TxTable.lookupKeys]]/`lookupStringKeys` — partial
+    * stats bounds ([[TxTable.lookupFiles]]/`lookupStringFiles`, read
+    * by [[TxTable.scanKeys]] — partial
     * bloom coverage composes per dir, so one over-cap compacted dir
     * degrades only its own pruning), and a typical all-new batch reads
     * ZERO stored files. Fallbacks — an unbloomable key type (the date
@@ -117,12 +118,15 @@ final class EventStore(root: String) {
         val keyRows =
           up.select(key).na.drop(Seq(key)).limit(MaxProbeKeys + 1).collect()
         if (keyRows.length > MaxProbeKeys) exact
-        else if (keyType == LongType)
-          TxTable.lookupKeys(spark, d, key,
-            keyRows.toSeq.map(_.getLong(0)), Some(snap)).select(key)
-        else
-          TxTable.lookupStringKeys(spark, d, key,
-            keyRows.toSeq.map(_.getString(0)), Some(snap)).select(key)
+        else if (keyType == LongType) {
+          val ks = keyRows.toSeq.map(_.getLong(0))
+          TxTable.scanKeys(spark, snap, key, ks, TxTable.lookupFiles(d, snap, key, ks))
+            .select(key)
+        } else {
+          val ks = keyRows.toSeq.map(_.getString(0))
+          TxTable.scanKeys(spark, snap, key, ks, TxTable.lookupStringFiles(d, snap, key, ks))
+            .select(key)
+        }
       }
     up.join(present, Seq(key), "left_anti")
   }
@@ -167,7 +171,8 @@ final class EventStore(root: String) {
     * (LONG/STRING keys register at init): a bloom-negative key is
     * PROVEN absent with zero table I/O, only the bloom-positive
     * suspects pay an exact check against the stats-pruned hit files
-    * ([[TxTable.lookupKeys]]/`lookupStringKeys`), and only the fresh
+    * ([[TxTable.lookupFiles]]/`lookupStringFiles`, read by
+    * [[TxTable.scanKeys]]), and only the fresh
     * rows land — one delta commit. Optimistic retry: a racing commit
     * fails the version claim, and the re-probe against the new
     * snapshot re-arbitrates, so concurrent inserters of the same key

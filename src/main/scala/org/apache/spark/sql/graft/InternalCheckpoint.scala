@@ -60,20 +60,38 @@ object InternalCheckpoint {
     * makes the checkpoint write read the just-computed blocks.
     *
     * `checkpointDir`: used only when the context has none set yet
-    * (first call wins, Spark keeps one per context). */
+    * (first call wins, Spark keeps one per context). With neither, a
+    * local master gets a fresh temp dir and any other master fails
+    * ([[checkpointDirToSet]]). */
   def pinReliable(spark: SparkSession, df: DataFrame,
                   checkpointDir: Option[String] = None)
       : (DataFrame, RDD[InternalRow]) = {
     val sc = spark.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      sc.setCheckpointDir(checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-ckpt").toString))
+    checkpointDirToSet(sc.master, sc.getCheckpointDir, checkpointDir)
+      .foreach(sc.setCheckpointDir)
     val rdd = exec(df).toRdd.map(_.copy())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rdd.checkpoint()
     (spark.asInstanceOf[ClassicSparkSession].internalCreateDataFrame(rdd, df.schema),
       rdd)
   }
+
+  /** The checkpoint dir [[pinReliable]] sets: none when the context
+    * already has one, else the caller's, else — on a `local*` master
+    * only, where driver and executors share one filesystem — a fresh
+    * driver-local temp dir. Any other master fails: a block lost on one
+    * executor could not be re-read from another machine's local dir,
+    * which would silently defeat the reliable pin. */
+  def checkpointDirToSet(master: String, current: Option[String],
+                         given: Option[String]): Option[String] =
+    if (current.isDefined) None
+    else given.orElse {
+      require(master.startsWith("local"),
+        s"pinReliable on master $master needs a checkpoint dir on a filesystem " +
+          "every executor shares: pass checkpointDir or call " +
+          "SparkContext.setCheckpointDir first")
+      Some(java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    }
 
   /** Lineage cut WITHOUT a checkpoint: wrap `df`'s physical RDD as a
     * LogicalRDD so later actions re-analyze one leaf instead of the

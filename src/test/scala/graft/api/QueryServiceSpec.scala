@@ -63,6 +63,25 @@ class QueryServiceSpec extends SparkSpec {
     assert(QueryService.customerLookup(t, empty, -999L).isEmpty)
   }
 
+  test("a customerLookup hit on a TxTable summary starts no Spark job") {
+    import graft.sources.TxTable
+    import org.apache.spark.sql.types.StructType
+    val dir = java.nio.file.Files.createTempDirectory("graft_qs_summary").toString
+    TxTable.init(spark, dir, StructType.fromDDL(
+      "c_custkey BIGINT, c_name STRING, order_cnt BIGINT, total_spent DOUBLE"),
+      bloomCols = Seq("c_custkey"))
+    TxTable.append(spark, dir, spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](
+        org.apache.spark.sql.Row(1L, "from-summary", -1L, 0.0),
+        org.apache.spark.sql.Row(2L, "other", 3L, 1.5)),
+      StructType.fromDDL("c_custkey BIGINT, c_name STRING, order_cnt BIGINT, total_spent DOUBLE")))
+    val (hit, jobs) = jobsDuring {
+      QueryService.customerLookup(t, TxTable.lookupKeys(spark, dir, "c_custkey", Seq(1L)), 1L)
+    }
+    assert(hit.contains(org.apache.spark.sql.Row(1L, "from-summary", -1L, 0.0)))
+    assert(jobs == 0, s"summary hit started $jobs Spark jobs")
+  }
+
   test("sort key selection changes order, not membership") {
     val byChars = QueryService.searchDocuments(t, sort = QueryService.DocSort.CharsAsc, limit = 10000)
     val byId = QueryService.searchDocuments(t, sort = QueryService.DocSort.IdAsc, limit = 10000)

@@ -52,4 +52,16 @@ class InternalCheckpointSpec extends SparkSpec {
       if (before.isDefined) assert(established == before)
     } finally rdd.unpersist(blocking = true)
   }
+
+  test("pinReliable needs a shared checkpoint dir off a local master") {
+    val cluster = "spark://master:7077"
+    val err = intercept[IllegalArgumentException](
+      InternalCheckpoint.checkpointDirToSet(cluster, None, None))
+    assert(err.getMessage.contains("checkpoint dir"))
+    assert(InternalCheckpoint.checkpointDirToSet(cluster, None, Some("/shared/ckpt"))
+      .contains("/shared/ckpt"))
+    assert(InternalCheckpoint.checkpointDirToSet(cluster, Some("/set"), None).isEmpty)
+    assert(InternalCheckpoint.checkpointDirToSet("local[4]", None, None)
+      .exists(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d))))
+  }
 }

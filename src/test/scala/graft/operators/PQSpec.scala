@@ -30,6 +30,18 @@ class PQSpec extends SparkSpec {
       "single-pass-per-iteration trainer diverged from per-subspace Lloyd")
   }
 
+  test("seeds are the k smallest vec_ids present, not the ids below k") {
+    // Ids offset by 10,000: no id is below k, yet the seeds are the same
+    // vectors, so the fitted codebooks are too.
+    val shifted = vecs.selectExpr("vec_id + 10000 AS vec_id", "e")
+    assert(PQ.fit(shifted, m, dsub, ksub, iters) == cbs)
+    def sub(v: org.apache.spark.sql.DataFrame) = v
+      .selectExpr("vec_id", s"${PQ.subExpr("e", 0, dsub)} AS e")
+      .selectExpr("vec_id", "e", s"${VectorOps.normSq("e")} AS nsq")
+    assert(PQ.renumber(KMeans.fitL2(sub(shifted), ksub, iters)) ==
+      PQ.renumber(KMeans.fitL2(sub(vecs), ksub, iters)))
+  }
+
   test("codebooks: m subspaces, ≤ ksub centroids each, codes renumbered 0..k-1") {
     assert(cbs.size == m)
     cbs.foreach { cb =>

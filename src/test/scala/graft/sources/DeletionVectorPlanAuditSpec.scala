@@ -61,7 +61,12 @@ class DeletionVectorPlanAuditSpec extends SparkSpec {
       spark.range(0L, 1000L).toDF("k")
         .withColumn("v", org.apache.spark.sql.functions.col("k") * 2L))
     TxTable.deleteKeysDeferred(dir, "k", Seq(5L))
-    val hit = TxTable.lookupKeys(spark, dir, "k", Seq(4L, 5L, 6L))
+    // The lookup's scan path (TxTable.scanKeys; a pruned set this small
+    // is otherwise read on the driver, with no scan to audit), on the
+    // files the lookup plans.
+    val snap = TxTable.snapshot(dir)
+    val keys = Seq(4L, 5L, 6L)
+    val hit = TxTable.scanKeys(spark, snap, "k", keys, TxTable.lookupFiles(dir, snap, "k", keys))
     val plan = hit.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     val pushed = plan.linesIterator.find(_.contains("PushedFilters"))
@@ -70,5 +75,7 @@ class DeletionVectorPlanAuditSpec extends SparkSpec {
       s"lookup IN predicate lost from the scan: $pushed")
     assert(hit.select("k").as[Long].collect().sorted.toSeq == Seq(4L, 6L),
       "mask or lookup filter wrong at row level")
+    assert(TxTable.lookupKeys(spark, dir, "k", keys).select("k").as[Long]
+      .collect().sorted.toSeq == Seq(4L, 6L), "driver read disagrees with the scan")
   }
 }

@@ -731,16 +731,22 @@ class TxTableSpec extends SparkSpec {
     // hit a file, but the Bloom proves it absent — zero files planned.
     // (Deterministic: a fixed key either collides at fpp 1e-4 or not.)
     assert(TxTable.lookupStringFiles(dir, s, "name", Seq("c9")).isEmpty)
-    // The lookup read returns exactly the present keys' rows, and its
-    // IN predicate reaches the parquet scan (row-group skipping inside
-    // the surviving files — the second pruning tier after file-level).
-    val lookup = TxTable.lookupStringKeys(spark, dir, "name", Seq("c1", "f2", "zzz"))
+    // The scan read of the planned files returns exactly the present
+    // keys' rows, and its IN predicate reaches the parquet scan
+    // (row-group skipping inside the surviving files — the second
+    // pruning tier after file-level). The lookup (read on the driver
+    // at this size) returns the same rows.
+    val keys = Seq("c1", "f2", "zzz")
+    val lookup = TxTable.scanKeys(spark, s, "name", keys,
+      TxTable.lookupStringFiles(dir, s, "name", keys))
     val plan = lookup.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(name"),
       s"IN filter not pushed to the scan:\n$plan")
     val got = lookup
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     assert(got == Seq(("c1", 1L), ("f2", 2L)))
+    assert(TxTable.lookupStringKeys(spark, dir, "name", keys)
+      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq == got)
   }
 
   test("long point lookup plans from the manifest: bloom + stats pruning") {
@@ -757,14 +763,20 @@ class TxTableSpec extends SparkSpec {
     // An absent key INSIDE the global range: stats bounds would hit a
     // file, but the Bloom proves it absent — zero files planned.
     assert(TxTable.lookupFiles(dir, s, "k", Seq(35L)).isEmpty)
-    // The lookup read returns exactly the present keys' rows, and its
-    // IN predicate reaches the parquet scan (row-group skipping inside
-    // the surviving files — the second pruning tier after file-level).
-    val lookup = TxTable.lookupKeys(spark, dir, "k", Seq(30L, 1200L, -7L))
+    // The scan read of the planned files returns exactly the present
+    // keys' rows, and its IN predicate reaches the parquet scan
+    // (row-group skipping inside the surviving files — the second
+    // pruning tier after file-level). The lookup (read on the driver
+    // at this size) returns the same rows.
+    val keys = Seq(30L, 1200L, -7L)
+    val lookup = TxTable.scanKeys(spark, s, "k", keys, TxTable.lookupFiles(dir, s, "k", keys))
     val plan = lookup.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(k"),
       s"IN filter not pushed to the scan:\n$plan")
     assert(lookup.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      == Seq((30L, 3L), (1200L, 120L)))
+    assert(TxTable.lookupKeys(spark, dir, "k", keys)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       == Seq((30L, 3L), (1200L, 120L)))
   }
 
