@@ -1,8 +1,10 @@
 package graft.sources
 
-import java.nio.file.Path
+import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -128,19 +130,21 @@ object PrunedReplace {
   def stageReplaceWith(spark: SparkSession, dir: String, keyCol: String,
                        removeKeys: Array[Long])
                       (upsertsFor: DataFrame => DataFrame): Staged =
-    stageImpl[Long](spark, dir, keyCol, removeKeys,
-      new Keyed[Long] {
-        val ord = Ordering.Long
-        def manifestRange(l: Map[String, (Long, Long)],
-                          s: Map[String, (String, String)]) = l.get(keyCol)
-        def footerRange(f: Path) = ParquetFooterStats.longRange(spark, f, keyCol)
-        def remap(l: Map[String, (Long, Long)], s: Map[String, (String, String)],
-                  kr: Option[(Long, Long)]) = (l ++ kr.map(keyCol -> _), s)
-        def keysDf(keys: Seq[Long]) = spark.createDataset(keys)(
-          org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol)
-        def mightContain(bf: org.apache.spark.util.sketch.BloomFilter, k: Long) =
-          bf.mightContainLong(k)
-      })(upsertsFor)
+    stageImpl[Long](spark, dir, keyCol, removeKeys, longKeyed(spark, keyCol))(upsertsFor)
+
+  private def longKeyed(spark: SparkSession, keyCol: String): Keyed[Long] =
+    new Keyed[Long] {
+      val ord = Ordering.Long
+      def manifestRange(l: Map[String, (Long, Long)],
+                        s: Map[String, (String, String)]) = l.get(keyCol)
+      def footerRange(f: Path) = ParquetFooterStats.longRange(spark, f, keyCol)
+      def remap(l: Map[String, (Long, Long)], s: Map[String, (String, String)],
+                kr: Option[(Long, Long)]) = (l ++ kr.map(keyCol -> _), s)
+      def keysDf(keys: Seq[Long]) = spark.createDataset(keys)(
+        org.apache.spark.sql.Encoders.scalaLong).toDF(keyCol)
+      def mightContain(bf: org.apache.spark.util.sketch.BloomFilter, k: Long) =
+        bf.mightContainLong(k)
+    }
 
   /** [[stageReplaceWith]] on a STRING key column: hit tests run against
     * the manifest's `sstats` bounds in UTF-8 byte order. */
@@ -176,12 +180,32 @@ object PrunedReplace {
     def mightContain(bf: org.apache.spark.util.sketch.BloomFilter, k: K): Boolean
   }
 
-  private def stageImpl[K: scala.reflect.ClassTag](
-      spark: SparkSession, dir: String, keyCol: String,
-      removeKeys: Array[K], ko: Keyed[K])
-     (upsertsFor: DataFrame => DataFrame): Staged = {
+  /** What a replace of `keys` reads and keeps, planned from one
+    * snapshot: the files it rewrites (`hit`) and the files it carries
+    * by reference, each with the stats the commit records for it. */
+  private final case class Plan(snap: TxTable.Snapshot, schema: StructType,
+                                hit: Seq[Path],
+                                carry: Seq[(Path, (Map[String, (Long, Long)],
+                                                   Map[String, (String, String)]))]) {
+    /** The [[Staged]] replace of this plan by staged dir `u`. */
+    def staged(dir: String, u: String, stagedSchema: StructType,
+               stagedBlooms: Map[String, Seq[String]]): Staged = {
+      val fileKey = (f: Path) => (f.getParent.getFileName.toString, f.getFileName.toString)
+      val removeFiles = hit.map(fileKey)
+        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      val upgraded = carry.map { case (f, stats) => (fileKey(f), stats) }
+      Staged(dir, u, stagedSchema, hit.size.toLong,
+        (hit.size + carry.size).toLong, snap,
+        removeFiles,
+        upgraded.collect { case ((d, n), (lst, _)) if lst.nonEmpty => s"$d/$n" -> lst }.toMap,
+        upgraded.collect { case ((d, n), (_, sst)) if sst.nonEmpty => s"$d/$n" -> sst }.toMap,
+        carryDirs = true, stagedBlooms = stagedBlooms)
+    }
+  }
+
+  private def plan[K](spark: SparkSession, dir: String, keys: Array[K],
+                      ko: Keyed[K], keyCol: String): Plan = {
     val snap = TxTable.snapshot(dir)
-    val keys = removeKeys.distinct.sorted(ko.ord)
     // ONE directory enumeration pairing long and string bounds per file
     // (two listings zipped positionally could misalign under a
     // concurrent vacuum — a file tested against another's bounds).
@@ -215,10 +239,24 @@ object PrunedReplace {
       })
       (f, lst, sst, keyRange, isHit)
     }
-    val hit = annotated.filter(_._5)
-    val carry = annotated.filterNot(_._5)
-      .map(a => (a._1, ko.remap(a._2, a._3, a._4)))
-    val schema = StructType.fromDDL(snap.schemaDdl)
+    Plan(snap, StructType.fromDDL(snap.schemaDdl),
+      annotated.filter(_._5).map(_._1),
+      annotated.filterNot(_._5).map(a => (a._1, ko.remap(a._2, a._3, a._4))))
+  }
+
+  /** Bytes per rewritten file: a replace writes its hit files' bytes
+    * into ceil(bytes / this) files — at least one, at most one more
+    * than it removes — so the same compaction bin as
+    * `EventStore.compactFacts`. */
+  private[sources] val TargetFileBytes: Long = 128L * 1024 * 1024
+
+  private def stageImpl[K: scala.reflect.ClassTag](
+      spark: SparkSession, dir: String, keyCol: String,
+      removeKeys: Array[K], ko: Keyed[K])
+     (upsertsFor: DataFrame => DataFrame): Staged = {
+    val keys = removeKeys.distinct.sorted(ko.ord)
+    val p = plan(spark, dir, keys, ko, keyCol)
+    import p.{hit, schema, snap}
     // Tombstone mask on the hit rows: without it a derive-from-old
     // upsert (mergeSummary's arithmetic) would fold a LOGICALLY DELETED
     // row's values back into its key — resurrection through the merge.
@@ -230,24 +268,25 @@ object PrunedReplace {
       if (hit.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
       else TxTable.applyDeletes(
-        spark.read.schema(schema).parquet(hit.map(_._1.toString): _*), snap)
+        spark.read.schema(schema).parquet(hit.map(_.toString): _*), snap)
     val rewritten0 =
       if (hit.isEmpty) upsertsFor(hitRows)
       else hitRows.join(broadcast(ko.keysDf(keys.toSeq)), Seq(keyCol), "left_anti")
         .unionByName(upsertsFor(hitRows))
-    // File-count AND clustering stability: the rewrite REPLACES
-    // hit.size files, so write about that many — range-clustered on
-    // the key. Without this the frame's final-stage partitioning
-    // (union of scan splits + shuffle partitions) writes
-    // O(spark.sql.shuffle.partitions) shards per replace and a long
-    // append stream fragments the table linearly; and a naive coalesce
-    // would mix inserts into rewritten files, WIDENING their key
-    // ranges so every future replace over-hits. The range shuffle is
-    // delta-bounded by the operator's contract (hit rows + upserts),
-    // keeps fresh files' ranges tight and disjoint, and the
-    // within-partition sort gives their row groups monotone stats —
-    // each replace REPAIRS clustering decay instead of compounding it.
-    // (+1: inserts beyond the hit ranges get their own tail file.)
+    // File-count AND clustering stability: the rewrite REPLACES the hit
+    // files, so write as many files as their bytes fill
+    // ([[TargetFileBytes]]) — never more than hit.size + 1, so a
+    // replace cannot grow the table's file count by more than the tail
+    // file a pure insert needs, and an all-hit replace on a small table
+    // keeps its count (sizing by hit.size + 1 alone grew it by one file
+    // per call). Range-clustered on the key: without this the frame's
+    // final-stage partitioning (union of scan splits + shuffle
+    // partitions) writes O(spark.sql.shuffle.partitions) shards per
+    // replace and a long append stream fragments the table linearly;
+    // the range shuffle is delta-bounded by the operator's contract
+    // (hit rows + upserts), keeps fresh files' ranges tight and
+    // disjoint, and the within-partition sort gives their row groups
+    // monotone stats.
     // Restore the table's declared column ORDER before staging: the
     // anti-join above moves keyCol to the first position, and the
     // staged frame's schema becomes the committed DDL — without this
@@ -255,9 +294,12 @@ object PrunedReplace {
     // reorders the table's columns (reads stay correct — parquet is
     // name-resolved — but the logical schema must not drift under
     // layout maintenance).
+    val hitBytes = hit.map(TxTable.sizeOrZero).sum
+    val parts = math.min(hit.size + 1L,
+      math.max(1L, (hitBytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
     val rewritten = rewritten0
       .select(schema.fieldNames.map(col(_)): _*)
-      .repartitionByRange(hit.size + 1, col(keyCol))
+      .repartitionByRange(parts, col(keyCol))
       .sortWithinPartitions(col(keyCol))
     // Stage ONLY the rewritten rows; untouched files never move — the
     // commit's manifest keeps their dirs and lists the hit files as
@@ -277,32 +319,52 @@ object PrunedReplace {
       val cols = snap.bloomCols.filter(rewritten.schema.fieldNames.contains(_))
       if (cols.isEmpty) Map.empty[String, Seq[String]]
       else {
-        val df = spark.read.schema(rewritten.schema)
-          .parquet(TxTable.stagedPath(dir, u))
         val n = TxTable.stagedRowCount(dir, u) // footer counts: no count job
         if (n > TxTable.MaxBloomItems) Map.empty[String, Seq[String]]
         else {
-          cols.foreach { c =>
-            // stat.bloomFilter NPEs on an empty frame; an empty dir's
-            // filter is the empty filter (proves every key absent).
-            TxTable.preBloom(dir, u, c,
-              if (n == 0L)
-                org.apache.spark.util.sketch.BloomFilter.create(1L, TxTable.BloomFpp)
-              else df.stat.bloomFilter(c, n, TxTable.BloomFpp))
-          }
+          val df = spark.read.schema(rewritten.schema)
+            .parquet(TxTable.stagedPath(dir, u))
+          cols.foreach(c => TxTable.preBloom(dir, u, c, TxTable.columnBloom(df, c, n)))
           Map(u -> cols)
         }
       }
     }
-    val fileKey = (f: Path) => (f.getParent.getFileName.toString, f.getFileName.toString)
-    val removeFiles = hit.map(h => fileKey(h._1))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val upgraded = carry.map { case (f, stats) => (fileKey(f), stats) }
-    Staged(dir, u, rewritten.schema, hit.size.toLong,
-      (hit.size + carry.size).toLong, snap,
-      removeFiles,
-      upgraded.collect { case ((d, n), (lst, _)) if lst.nonEmpty => s"$d/$n" -> lst }.toMap,
-      upgraded.collect { case ((d, n), (_, sst)) if sst.nonEmpty => s"$d/$n" -> sst }.toMap,
-      carryDirs = true, stagedBlooms = stagedBlooms)
+    p.staged(dir, u, rewritten.schema, stagedBlooms)
+  }
+
+  /** [[stageReplaceWith]] held on the DRIVER, for a replace whose hit
+    * files hold at most [[TxTable.DriverLookupBytes]] on disk — a
+    * micro-batch's summary merge. The same plan (manifest stats, Bloom
+    * refinement) picks the hit files; [[DriverScan]] reads them under
+    * the tombstone mask with no Spark job; `upsertsFor` derives the
+    * replacement rows from those rows as a frame over a local relation
+    * (its projections fold on the driver with no job); and the
+    * rewrite — hit rows minus the removed keys,
+    * plus the upserts, sorted on the key — is one file written by one
+    * job, its Bloom filters built from the same rows ([[TxTable.bloomOf]]).
+    * One file is what [[TargetFileBytes]] sizes such a rewrite to.
+    * `None` when the hit files are larger: take [[stageReplaceWith]]. */
+  def stageReplaceLocal(spark: SparkSession, dir: String, keyCol: String,
+                        removeKeys: Array[Long])
+                       (upsertsFor: Seq[Row] => DataFrame): Option[Staged] = {
+    val keys = removeKeys.distinct.sorted
+    val p = plan(spark, dir, keys, longKeyed(spark, keyCol), keyCol)
+    val sized = p.hit.map(f => (f, Files.size(f)))
+    if (sized.map(_._2).sum > TxTable.DriverLookupBytes) return None
+    val hitRows = TxTable.applyDeletes(
+      DriverScan.read(spark, p.schema, sized), p.snap).collect().toSeq
+    val schema = p.schema.toNullable
+    val ki = schema.fieldIndex(keyCol)
+    val removed = keys.toSet
+    val upserts = upsertsFor(hitRows).select(schema.fieldNames.map(col(_)): _*).collect()
+    val rows = (hitRows.filterNot(r => !r.isNullAt(ki) && removed(r.getLong(ki))) ++ upserts)
+      .sortBy(r => if (r.isNullAt(ki)) None else Some(r.getLong(ki))) // NULLs first, as Spark sorts
+    val u = TxTable.stage(dir, spark.createDataFrame(rows.asJava, schema).coalesce(1))
+    val cols = p.snap.bloomCols.filter(schema.fieldNames.contains(_))
+    cols.foreach { c =>
+      val i = schema.fieldIndex(c)
+      TxTable.preBloom(dir, u, c, TxTable.bloomOf(rows.map(_.get(i))))
+    }
+    Some(p.staged(dir, u, schema, if (cols.isEmpty) Map.empty else Map(u -> cols)))
   }
 }

@@ -696,20 +696,34 @@ object TxTable {
     if (todo.isEmpty) return listing
     val rows = stagedRowCount(dir, uuid)
     if (rows > MaxBloomItems) return listing
-    Files.createDirectories(indexDir(dir))
     val df = spark.read.schema(schema).parquet(stagedPath(dir, uuid))
-    val written = todo.map { c =>
-      // stat.bloomFilter NPEs on an empty frame (its aggregate returns
-      // a null buffer); an empty dir's filter is just the empty filter
-      // — says "maybe" to nothing, correctly proving every key absent.
-      val bf =
-        if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
-        else df.stat.bloomFilter(c, rows, BloomFpp)
-      val out = Files.newOutputStream(bloomPath(dir, uuid, c))
-      try bf.writeTo(out) finally out.close()
-      c
-    }
-    Map(uuid -> (pre ++ written))
+    todo.foreach(c => preBloom(dir, uuid, c, columnBloom(df, c, rows)))
+    Map(uuid -> (pre ++ todo))
+  }
+
+  /** The Bloom filter of `df`'s column `c`, sized for `rows` rows. An
+    * empty frame, or one whose `c` is NULL in every row, gets the empty
+    * filter — it says "maybe" to nothing, correctly proving every key
+    * absent (NULL keys are never probed). `stat.bloomFilter` throws on
+    * both: its aggregate returns no buffer when no non-NULL value
+    * arrives, and it rejects a zero size. */
+  private[sources] def columnBloom(df: DataFrame, c: String, rows: Long)
+      : org.apache.spark.util.sketch.BloomFilter =
+    if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
+    else try df.stat.bloomFilter(c, rows, BloomFpp)
+    catch { case _: NullPointerException =>
+      org.apache.spark.util.sketch.BloomFilter.create(rows, BloomFpp) }
+
+  /** The Bloom filter of driver-held key values (LONG or STRING; NULLs
+    * skipped), built as `stat.bloomFilter` builds it — the filter a
+    * committer holding its staged rows hands to [[commit]] or
+    * [[preBloom]] instead of paying the harvest's data pass. */
+  def bloomOf(keys: Iterable[Any]): org.apache.spark.util.sketch.BloomFilter = {
+    val present = keys.filter(_ != null)
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(
+      math.max(1L, present.size.toLong), BloomFpp)
+    present.foreach(k => bf.put(k.asInstanceOf[AnyRef]))
+    bf
   }
 
   /** Row count of a staged dir from its parquet FOOTERS — free relative
@@ -912,6 +926,17 @@ object TxTable {
                        snapOpt: Option[Snapshot] = None): DataFrame = {
     val snap = snapOpt.getOrElse(snapshot(dir))
     lookupRows(spark, snap, col, keys, lookupStringFiles(dir, snap, col, keys))
+  }
+
+  /** [[lookupKeys]] on a key column the manifest keeps neither stats
+    * nor Blooms for (a DATE key): every live file is a candidate, read
+    * as the pruned lookups read theirs — on the driver within
+    * [[DriverLookupBytes]], else scanned. */
+  def lookupUnprunedKeys(spark: SparkSession, dir: String, col: String,
+                         keys: Seq[Any], snapOpt: Option[Snapshot] = None): DataFrame = {
+    val snap = snapOpt.getOrElse(snapshot(dir))
+    lookupRows(spark, snap, col, keys,
+      if (keys.isEmpty) Nil else dataFiles(dir, snap).map(_._1))
   }
 
   /** The read half of both point lookups: at most [[DriverLookupBytes]]
@@ -1570,7 +1595,9 @@ object TxTable {
     * another writer committed first. */
   def commit(spark: SparkSession, dir: String, df0: DataFrame,
              expected: Snapshot, keepExisting: Boolean = false,
-             txnUpdate: Map[String, Long] = Map.empty): Snapshot = {
+             txnUpdate: Map[String, Long] = Map.empty,
+             blooms: Map[String, org.apache.spark.util.sketch.BloomFilter] = Map.empty)
+      : Snapshot = {
     // Appends keep the table's declared column ORDER (new columns go
     // last): the appended frame's schema becomes the manifest DDL, so
     // without this select a batch whose columns merely arrive in a
@@ -1591,6 +1618,8 @@ object TxTable {
           org.apache.spark.sql.functions.col(s"`${n.replace("`", "``")}`")): _*)
       }
     val u = stage(dir, df)
+    // Caller-built filters ([[bloomOf]]) skip the harvest's data pass.
+    blooms.foreach { case (c, bf) => preBloom(dir, u, c, bf) }
     val (newStats, newSStats, newNonulls) = statsFor(dir, u, df.schema)
     val newBlooms = harvestBlooms(spark, dir, u, df.schema, expected.bloomCols)
     val dirs = (if (keepExisting) expected.dirs else Seq.empty) :+ u
@@ -1986,8 +2015,10 @@ object TxTable {
     (0L, 0L) // unreachable
   }
 
-  def append(spark: SparkSession, dir: String, df: DataFrame): Snapshot =
-    retrying(dir)(s => commit(spark, dir, df, s, keepExisting = true))
+  def append(spark: SparkSession, dir: String, df: DataFrame,
+             blooms: Map[String, org.apache.spark.util.sketch.BloomFilter] = Map.empty)
+      : Snapshot =
+    retrying(dir)(s => commit(spark, dir, df, s, keepExisting = true, blooms = blooms))
 
   def overwrite(spark: SparkSession, dir: String, df: DataFrame): Snapshot =
     retrying(dir)(s => commit(spark, dir, df, s))

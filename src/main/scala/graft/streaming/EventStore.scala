@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StringType, StructField, StructType}
 
 import graft.sources.TxTable
 
@@ -77,14 +78,33 @@ final class EventStore(root: String) {
     TxTable.append(df.sparkSession, dir("fact_events"), df)
   }
 
+  /** [[appendFacts]] of driver-held rows: one file, one write job, and
+    * the event_id Bloom built from the rows instead of a data pass. */
+  private[streaming] def appendFactRows(spark: SparkSession, schema: StructType,
+                                        rows: Seq[Row]): Unit = {
+    ensureInit(spark, "fact_events", schema, bloomCols = Seq("event_id"))
+    val d = dir("fact_events")
+    TxTable.append(spark, d, held(spark, schema, rows),
+      heldBlooms(TxTable.snapshot(d).bloomCols, schema, rows))
+    ()
+  }
+
+  /** Driver-held rows as a frame: a `LocalRelation`, so projections over
+    * it fold in Catalyst with no Spark job, and written as ONE file by
+    * one job (unsplit, a local relation writes one file per core). */
+  private def held(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+
+  /** The Bloom filters a commit of `rows` owes the table's registered
+    * `bloomCols`, built on the driver ([[TxTable.bloomOf]]). */
+  private def heldBlooms(bloomCols: Seq[String], schema: StructType, rows: Seq[Row]) =
+    bloomCols.filter(schema.fieldNames.contains(_)).map { c =>
+      val i = schema.fieldIndex(c)
+      c -> TxTable.bloomOf(rows.map(_.get(i)))
+    }.toMap
+
   def table(spark: SparkSession, name: String): DataFrame =
     TxTable.read(spark, dir(name))
-
-  /** Driver bound for [[insertIfAbsent]]'s per-batch key collect (the
-    * Bloom probe runs driver-side); a batch beyond it falls back to the
-    * exact key-column anti-scan. Dimension inserts are per-micro-batch
-    * distinct keys — far below this in any sane trigger. */
-  private[streaming] val MaxProbeKeys = 100000
 
   /** Delta commits before [[insertIfAbsent]] folds its table back to
     * one key-clustered dir — the LSM level-0 discipline: a long stream
@@ -116,8 +136,8 @@ final class EventStore(root: String) {
         // set (getLong/getString would NPE on them); the anti-join below
         // keeps their rows "fresh" exactly as the exact fallback would.
         val keyRows =
-          up.select(key).na.drop(Seq(key)).limit(MaxProbeKeys + 1).collect()
-        if (keyRows.length > MaxProbeKeys) exact
+          up.select(key).na.drop(Seq(key)).limit(EventStore.MaxProbeKeys + 1).collect()
+        if (keyRows.length > EventStore.MaxProbeKeys) exact
         else if (keyType == LongType) {
           val ks = keyRows.toSeq.map(_.getLong(0))
           TxTable.scanKeys(spark, snap, key, ks, TxTable.lookupFiles(d, snap, key, ks))
@@ -162,6 +182,34 @@ final class EventStore(root: String) {
       fresh
     }
 
+  /** [[absentOnly]] for driver-held rows (of `schema`): the rows whose
+    * `key` is absent from `name`, decided by ONE point lookup of their
+    * keys — [[TxTable.lookupKeys]] for LONG keys (Bloom sidecars, stats
+    * pruning, then a driver read of small files: no Spark job), its
+    * STRING twin, and [[TxTable.lookupUnprunedKeys]] for other key
+    * types. NULL keys never match, so their rows are always fresh, as
+    * in the anti-join. A missing table means everything is fresh. */
+  private[streaming] def absentRows(spark: SparkSession, name: String, schema: StructType,
+                 rows: Seq[Row], key: String): Seq[Row] =
+    if (!TxTable.exists(dir(name))) rows
+    else absentAt(spark, dir(name), TxTable.snapshot(dir(name)), schema, rows, key)
+
+  private def absentAt(spark: SparkSession, d: String, snap: TxTable.Snapshot,
+                       schema: StructType, rows: Seq[Row], key: String): Seq[Row] = {
+    val ki = schema.fieldIndex(key)
+    val keys = rows.map(_.get(ki)).filter(_ != null).distinct
+    val present: Set[Any] =
+      if (keys.isEmpty) Set.empty
+      else (schema(key).dataType match {
+        case LongType =>
+          TxTable.lookupKeys(spark, d, key, keys.map(_.asInstanceOf[Long]), Some(snap))
+        case StringType =>
+          TxTable.lookupStringKeys(spark, d, key, keys.map(_.asInstanceOf[String]), Some(snap))
+        case _ => TxTable.lookupUnprunedKeys(spark, d, key, keys, Some(snap))
+      }).select(key).collect().map(_.get(0)).toSet
+    rows.filter(r => r.isNullAt(ki) || !present(r.get(ki)))
+  }
+
   /** S4: first-writer-wins keyed insert (`INSERT IGNORE`) — APPEND-
     * shaped. The previous shape (anti-join inside [[TxTable.merge]])
     * REWROTE the whole table every call: O(table) writes per
@@ -205,13 +253,42 @@ final class EventStore(root: String) {
       finally freshRdd.unpersist(blocking = false)
     }
     upRdd.unpersist(blocking = false)
-    // Level-0 fold: compact the accumulated delta dirs into ONE
-    // key-clustered dir (tight per-file bounds keep the suspect
-    // lookups O(hit files)) while the base dir carries BY REFERENCE —
-    // O(deltas) I/O per fold, never the O(table) rewrite the old
-    // whole-table overwrite paid every AutoCompactDirs batches. A
-    // racing commit skips the fold (maintenance, not data — the next
-    // over-cap batch retriggers it).
+    foldDeltas(spark, d, key)
+  }
+
+  /** [[insertIfAbsent]] of driver-held, key-unique rows (of `schema`):
+    * the probe is [[absentRows]]' point lookup, and the fresh rows land
+    * as one file with their Bloom filters built on the driver — no
+    * Spark job but the write, none at all when every key is present.
+    * Same retry and level-0 fold as [[insertIfAbsent]]. */
+  private[streaming] def insertRowsIfAbsent(spark: SparkSession, name: String, schema: StructType,
+                         rows: Seq[Row], key: String): Unit = {
+    val keyType = schema(key).dataType
+    ensureInit(spark, name, schema,
+      bloomCols = if (keyType == LongType || keyType == StringType) Seq(key) else Nil)
+    val d = dir(name)
+    var done = false
+    while (!done) {
+      val snap = TxTable.snapshot(d)
+      val fresh = absentAt(spark, d, snap, schema, rows, key)
+      try {
+        if (fresh.nonEmpty)
+          TxTable.commit(spark, d, held(spark, schema, fresh), snap, keepExisting = true,
+            blooms = heldBlooms(snap.bloomCols, schema, fresh))
+        done = true
+      } catch { case _: TxTable.ConcurrentCommitException => () } // re-probe
+    }
+    foldDeltas(spark, d, key)
+  }
+
+  /** Level-0 fold: compact the accumulated delta dirs into ONE
+    * key-clustered dir (tight per-file bounds keep the suspect lookups
+    * O(hit files)) while the base dir carries BY REFERENCE — O(deltas)
+    * I/O per fold, never the O(table) rewrite the old whole-table
+    * overwrite paid every AutoCompactDirs batches. A racing commit
+    * skips the fold (maintenance, not data — the next over-cap batch
+    * retriggers it). */
+  private def foldDeltas(spark: SparkSession, d: String, key: String): Unit = {
     val after = TxTable.snapshot(d)
     if (after.dirs.size > AutoCompactDirs)
       try TxTable.compactDirs(spark, d, after, TxTable.levelZeroDirs(d, after))(
@@ -225,14 +302,21 @@ final class EventStore(root: String) {
   private def mergeFrames(existing: DataFrame, delta: DataFrame): DataFrame = {
     val e = existing.select(col("user_id"), col("event_cnt").as("e_cnt"),
       col("total_value").as("e_val"), col("last_ts").as("e_ts"))
-    e.join(delta, Seq("user_id"), "full_outer").select(
+    mergedTotals(e.join(delta, Seq("user_id"), "full_outer"))
+  }
+
+  /** The merge arithmetic over a joined (user_id, e_cnt, e_val, e_ts,
+    * event_cnt, total_value, last_ts) frame — Catalyst expressions the
+    * distributed join and the driver-held merge ([[mergeSummaryRows]])
+    * both evaluate. */
+  private def mergedTotals(joined: DataFrame): DataFrame =
+    joined.select(
       col("user_id"),
       (coalesce(col("e_cnt"), lit(0L)) + coalesce(col("event_cnt"), lit(0L))).as("event_cnt"),
       (coalesce(col("e_val"), lit(0).cast("decimal(18,2)")) +
         coalesce(col("total_value"), lit(0).cast("decimal(18,2)")))
         .cast("decimal(18,2)").as("total_value"),
       greatest(col("e_ts"), col("last_ts")).as("last_ts"))
-  }
 
   /** S5/A21: arithmetic merge of per-user deltas into running totals —
     * [[TxTable.merge]]'s optimistic read-transform-commit, so the
@@ -282,13 +366,16 @@ final class EventStore(root: String) {
   def mergeSummaryPruned(delta: DataFrame, maxDeltaKeys: Int = 100000): (Long, Long) = {
     val spark = delta.sparkSession
     if (!TxTable.exists(dir("summary_user"))) { mergeSummary(delta); return (0L, 0L) }
-    if (delta.select(col("user_id")).distinct().limit(maxDeltaKeys + 1).count() > maxDeltaKeys) {
+    // One bounded collect decides the guard and yields the key list.
+    val keyRows = delta.select(col("user_id")).distinct().limit(maxDeltaKeys + 1).collect()
+    if (keyRows.length > maxDeltaKeys) {
       mergeSummary(delta)
       val n = snapshotFiles(TxTable.snapshot(dir("summary_user")), "summary_user").size.toLong
       return (n, n)
     }
-    val keys = delta.select(col("user_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    // A NULL user_id never matches a stored row (the full outer join's
+    // semantics), so its delta row lands as an insert.
+    val keys = keyRows.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted
     // The keyed-replace form of the merge: existing rows carrying a
     // delta key are replaced by their arithmetic merge with the delta
     // (rows of hit files with OTHER keys survive via the replace's own
@@ -309,6 +396,49 @@ final class EventStore(root: String) {
       val n = snapshotFiles(TxTable.snapshot(dir("summary_user")), "summary_user").size.toLong
       (n, n)
     }
+  }
+
+  /** [[mergeSummaryPruned]] of a driver-held per-user delta: rows of
+    * `deltaSchema` = (user_id, event_cnt, total_value, last_ts), typed
+    * as the distributed delta's aggregates. The stored rows of the
+    * delta's users come from [[graft.sources.PrunedReplace.stageReplaceLocal]]'s
+    * driver read, the key match is a Scala map, and [[mergedTotals]]
+    * folds over the joined rows on the driver, so the merge starts one
+    * Spark job: its write. Takes [[mergeSummary]] when the summary does
+    * not exist yet or the single-writer race is lost, and
+    * [[mergeSummaryPruned]] when the hit files are over the driver
+    * bound. */
+  private[streaming] def mergeSummaryRows(spark: SparkSession, deltaSchema: StructType,
+                                          delta: Seq[Row]): Unit = {
+    def deltaDf = spark.createDataFrame(delta.asJava, deltaSchema)
+    val d = dir("summary_user")
+    if (!TxTable.exists(d)) { mergeSummary(deltaDf); return }
+    val joinedSchema = StructType(Seq(
+      StructField("user_id", LongType), StructField("e_cnt", LongType),
+      StructField("e_val", DecimalType(18, 2)),
+      StructField("e_ts", deltaSchema("last_ts").dataType)) ++ deltaSchema.fields.tail)
+    val staged = graft.sources.PrunedReplace.stageReplaceLocal(spark, d, "user_id",
+        delta.filterNot(_.isNullAt(0)).map(_.getLong(0)).toArray) { hitRows =>
+      val stored = hitRows.filter(_.getAs[Any]("user_id") != null)
+        .groupBy(_.getAs[Long]("user_id"))
+      // The full outer join of the delta with its users' stored rows.
+      val joined = delta.flatMap { r =>
+        val tail = Seq(r.get(1), r.get(2), r.get(3))
+        (if (r.isNullAt(0)) Nil else stored.getOrElse(r.getLong(0), Nil)) match {
+          case Nil => Seq(Row.fromSeq(Seq(r.get(0), null, null, null) ++ tail))
+          case es => es.map(e => Row.fromSeq(Seq(r.get(0), e.getAs[Any]("event_cnt"),
+            e.getAs[Any]("total_value"), e.getAs[Any]("last_ts")) ++ tail))
+        }
+      }
+      mergedTotals(spark.createDataFrame(joined.asJava, joinedSchema))
+    }
+    staged match {
+      case None => mergeSummaryPruned(deltaDf)
+      case Some(st) =>
+        try st.commit()
+        catch { case _: TxTable.ConcurrentCommitException => mergeSummary(deltaDf) }
+    }
+    ()
   }
 
   /** Fact rows appended since `sinceVersion`, plus the version to
@@ -588,4 +718,14 @@ final class EventStore(root: String) {
       if (TxTable.exists(dir(t))) TxTable.vacuum(dir(t), keepLast, orphanRetentionMs)
     }
   }
+}
+
+object EventStore {
+
+  /** Driver bound for [[EventStore.insertIfAbsent]]'s per-batch key
+    * collect (the Bloom probe runs driver-side; a batch beyond it falls
+    * back to the exact key-column anti-scan) and for the rows
+    * `StreamIngest.applyBatch` holds on the driver (measured by
+    * `graft.streaming.BatchCrossover`: the held path wins up to here). */
+  private[streaming] val MaxProbeKeys = 100000
 }

@@ -96,6 +96,22 @@ class MergePrunedSpec extends SparkSpec {
       s"bloom should prove the empty file keyless: rewrote $rewritten/$total")
   }
 
+  test("all-hit merges keep a small summary's live file count") {
+    val (store, root) = freshStore()
+    seed(store, 200)
+    store.clusterSummary(spark, files = 1)
+    val tbl = s"$root/summary_user"
+    def liveFiles() = graft.sources.TxTable.dataFiles(tbl, graft.sources.TxTable.snapshot(tbl)).size
+    assert(liveFiles() == 1)
+    // Every merge hits the one file: the rewrite replaces it with one.
+    for (i <- 1 to 20) {
+      val (rewritten, _) = store.mergeSummaryPruned(delta(Seq(1L, 100L, 200L + i)))
+      assert(rewritten == 1L && liveFiles() == 1,
+        s"merge $i: rewrote $rewritten, live files ${liveFiles()}")
+    }
+    assert(store.table(spark, "summary_user").count() == 220L)
+  }
+
   test("oversized delta falls back to the full merge") {
     val (a, _) = freshStore(); val (b, _) = freshStore()
     seed(a, 50); seed(b, 50)
