@@ -157,6 +157,29 @@ object ParquetFooterStats {
     v
   }
 
+  /** TRUE only when the footer PROVES `column` is NULL in every row:
+    * every row group's stats present with a SET null count equal to
+    * its row count. Unknown (missing chunk, absent stats, unset count)
+    * is false. One footer open, metadata only. */
+  def provenAllNull(conf: org.apache.hadoop.conf.Configuration,
+                    file: java.nio.file.Path, column: String): Boolean = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getFooter.getBlocks.toArray
+      .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.BlockMetaData])
+      .forall { b =>
+        b.getColumns.toArray
+          .map(_.asInstanceOf[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
+          .find(_.getPath.toDotString == column)
+          .exists { m =>
+            val s = m.getStatistics
+            s != null && s.isNumNullsSet && s.getNumNulls == b.getRowCount
+          }
+      }
+    finally r.close()
+  }
+
   private def provenNoNullsUncached(conf: org.apache.hadoop.conf.Configuration,
                                     file: java.nio.file.Path, column: String): Boolean = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(

@@ -112,9 +112,9 @@ object PrunedReplace {
   }
 
   def replaceWith(spark: SparkSession, dir: String, keyCol: String,
-                  removeKeys: Array[Long])
+                  removeKeys: Array[Long], removeNull: Boolean = false)
                  (upsertsFor: DataFrame => DataFrame): (Long, Long) = {
-    val st = stageReplaceWith(spark, dir, keyCol, removeKeys)(upsertsFor)
+    val st = stageReplaceWith(spark, dir, keyCol, removeKeys, removeNull)(upsertsFor)
     st.commit()
     (st.rewrittenFiles, st.totalFiles)
   }
@@ -126,11 +126,15 @@ object PrunedReplace {
     * removed keys. This is the arithmetic-merge hook: an upsert that
     * must combine old and new values per key reads only hit rows.
     * This staged form materializes everything without committing.
+    * `removeNull` treats NULL as one more removed key: the files that
+    * may hold a NULL key are hit too, and their NULL-keyed rows are
+    * replaced (a NULL-safe upsert, which keeps one NULL-keyed row).
     */
   def stageReplaceWith(spark: SparkSession, dir: String, keyCol: String,
-                       removeKeys: Array[Long])
+                       removeKeys: Array[Long], removeNull: Boolean = false)
                       (upsertsFor: DataFrame => DataFrame): Staged =
-    stageImpl[Long](spark, dir, keyCol, removeKeys, longKeyed(spark, keyCol))(upsertsFor)
+    stageImpl[Long](spark, dir, keyCol, removeKeys, longKeyed(spark, keyCol),
+      removeNull)(upsertsFor)
 
   private def longKeyed(spark: SparkSession, keyCol: String): Keyed[Long] =
     new Keyed[Long] {
@@ -204,8 +208,9 @@ object PrunedReplace {
   }
 
   private def plan[K](spark: SparkSession, dir: String, keys: Array[K],
-                      ko: Keyed[K], keyCol: String): Plan = {
+                      ko: Keyed[K], keyCol: String, removeNull: Boolean): Plan = {
     val snap = TxTable.snapshot(dir)
+    lazy val conf = spark.sessionState.newHadoopConf()
     // ONE directory enumeration pairing long and string bounds per file
     // (two listings zipped positionally could misalign under a
     // concurrent vacuum — a file tested against another's bounds).
@@ -236,7 +241,7 @@ object PrunedReplace {
           val from = TxTable.lowerBound(fKeys, lo, ko.ord)
           from < fKeys.length && ko.ord.lteq(fKeys(from), hi)
         case None => true // no usable stats → conservative rewrite
-      })
+      }) || (removeNull && !TxTable.provenNullFree(conf, snap, f, keyCol))
       (f, lst, sst, keyRange, isHit)
     }
     Plan(snap, StructType.fromDDL(snap.schemaDdl),
@@ -252,10 +257,10 @@ object PrunedReplace {
 
   private def stageImpl[K: scala.reflect.ClassTag](
       spark: SparkSession, dir: String, keyCol: String,
-      removeKeys: Array[K], ko: Keyed[K])
+      removeKeys: Array[K], ko: Keyed[K], removeNull: Boolean = false)
      (upsertsFor: DataFrame => DataFrame): Staged = {
     val keys = removeKeys.distinct.sorted(ko.ord)
-    val p = plan(spark, dir, keys, ko, keyCol)
+    val p = plan(spark, dir, keys, ko, keyCol, removeNull)
     import p.{hit, schema, snap}
     // Tombstone mask on the hit rows: without it a derive-from-old
     // upsert (mergeSummary's arithmetic) would fold a LOGICALLY DELETED
@@ -272,6 +277,7 @@ object PrunedReplace {
     val rewritten0 =
       if (hit.isEmpty) upsertsFor(hitRows)
       else hitRows.join(broadcast(ko.keysDf(keys.toSeq)), Seq(keyCol), "left_anti")
+        .filter(if (removeNull) col(keyCol).isNotNull else lit(true))
         .unionByName(upsertsFor(hitRows))
     // File-count AND clustering stability: the rewrite REPLACES the hit
     // files, so write as many files as their bytes fill
@@ -324,7 +330,7 @@ object PrunedReplace {
         else {
           val df = spark.read.schema(rewritten.schema)
             .parquet(TxTable.stagedPath(dir, u))
-          cols.foreach(c => TxTable.preBloom(dir, u, c, TxTable.columnBloom(df, c, n)))
+          cols.foreach(c => TxTable.preBloom(dir, u, c, TxTable.columnBloom(dir, u, df, c, n)))
           Map(u -> cols)
         }
       }
@@ -333,8 +339,9 @@ object PrunedReplace {
   }
 
   /** [[stageReplaceWith]] held on the DRIVER, for a replace whose hit
-    * files hold at most [[TxTable.DriverLookupBytes]] on disk — a
-    * micro-batch's summary merge. The same plan (manifest stats, Bloom
+    * files hold at most `maxHitBytes` on disk — a micro-batch's summary
+    * merge (its caller's bound is measured by
+    * `graft.streaming.BatchCrossover`). The same plan (manifest stats, Bloom
     * refinement) picks the hit files; [[DriverScan]] reads them under
     * the tombstone mask with no Spark job; `upsertsFor` derives the
     * replacement rows from those rows as a frame over a local relation
@@ -343,21 +350,23 @@ object PrunedReplace {
     * plus the upserts, sorted on the key — is one file written by one
     * job, its Bloom filters built from the same rows ([[TxTable.bloomOf]]).
     * One file is what [[TargetFileBytes]] sizes such a rewrite to.
-    * `None` when the hit files are larger: take [[stageReplaceWith]]. */
+    * `removeNull` is [[stageReplaceWith]]'s. `None` when the hit files
+    * are larger than `maxHitBytes`: take [[stageReplaceWith]]. */
   def stageReplaceLocal(spark: SparkSession, dir: String, keyCol: String,
-                        removeKeys: Array[Long])
+                        removeKeys: Array[Long], removeNull: Boolean, maxHitBytes: Long)
                        (upsertsFor: Seq[Row] => DataFrame): Option[Staged] = {
     val keys = removeKeys.distinct.sorted
-    val p = plan(spark, dir, keys, longKeyed(spark, keyCol), keyCol)
+    val p = plan(spark, dir, keys, longKeyed(spark, keyCol), keyCol, removeNull)
     val sized = p.hit.map(f => (f, Files.size(f)))
-    if (sized.map(_._2).sum > TxTable.DriverLookupBytes) return None
+    if (sized.map(_._2).sum > maxHitBytes) return None
     val hitRows = TxTable.applyDeletes(
       DriverScan.read(spark, p.schema, sized), p.snap).collect().toSeq
     val schema = p.schema.toNullable
     val ki = schema.fieldIndex(keyCol)
     val removed = keys.toSet
     val upserts = upsertsFor(hitRows).select(schema.fieldNames.map(col(_)): _*).collect()
-    val rows = (hitRows.filterNot(r => !r.isNullAt(ki) && removed(r.getLong(ki))) ++ upserts)
+    val rows = (hitRows.filterNot(r => if (r.isNullAt(ki)) removeNull else removed(r.getLong(ki)))
+      ++ upserts)
       .sortBy(r => if (r.isNullAt(ki)) None else Some(r.getLong(ki))) // NULLs first, as Spark sorts
     val u = TxTable.stage(dir, spark.createDataFrame(rows.asJava, schema).coalesce(1))
     val cols = p.snap.bloomCols.filter(schema.fieldNames.contains(_))

@@ -697,22 +697,31 @@ object TxTable {
     val rows = stagedRowCount(dir, uuid)
     if (rows > MaxBloomItems) return listing
     val df = spark.read.schema(schema).parquet(stagedPath(dir, uuid))
-    todo.foreach(c => preBloom(dir, uuid, c, columnBloom(df, c, rows)))
+    todo.foreach(c => preBloom(dir, uuid, c, columnBloom(dir, uuid, df, c, rows)))
     Map(uuid -> (pre ++ todo))
   }
 
-  /** The Bloom filter of `df`'s column `c`, sized for `rows` rows. An
-    * empty frame, or one whose `c` is NULL in every row, gets the empty
-    * filter — it says "maybe" to nothing, correctly proving every key
-    * absent (NULL keys are never probed). `stat.bloomFilter` throws on
-    * both: its aggregate returns no buffer when no non-NULL value
-    * arrives, and it rejects a zero size. */
-  private[sources] def columnBloom(df: DataFrame, c: String, rows: Long)
-      : org.apache.spark.util.sketch.BloomFilter =
-    if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
+  /** The Bloom filter of staged dir `uuid`'s column `c` (read as `df`),
+    * sized for its `rows` rows. A dir with no rows, or whose footers
+    * prove `c` NULL in every row, gets the empty filter — it says
+    * "maybe" to nothing, correctly proving every key absent (NULL keys
+    * are never probed). `stat.bloomFilter` throws on both: it rejects a
+    * zero size, and its aggregate returns no buffer (an NPE) when no
+    * non-NULL value arrives; an NPE the footers do not explain as an
+    * all-NULL column propagates. */
+  private[sources] def columnBloom(dir: String, uuid: String, df: DataFrame, c: String,
+                                   rows: Long): org.apache.spark.util.sketch.BloomFilter = {
+    def empty = org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
+    if (rows == 0L) empty
     else try df.stat.bloomFilter(c, rows, BloomFpp)
-    catch { case _: NullPointerException =>
-      org.apache.spark.util.sketch.BloomFilter.create(rows, BloomFpp) }
+    catch { case e: NullPointerException =>
+      val conf = new org.apache.hadoop.conf.Configuration()
+      val root = Paths.get(stagedPath(dir, uuid))
+      if (listNames(root).filter(_.endsWith(".parquet"))
+          .forall(n => ParquetFooterStats.provenAllNull(conf, root.resolve(n), c))) empty
+      else throw e
+    }
+  }
 
   /** The Bloom filter of driver-held key values (LONG or STRING; NULLs
     * skipped), built as `stat.bloomFilter` builds it — the filter a
@@ -1900,6 +1909,27 @@ object TxTable {
       knownBlooms = newBlooms, rewriteOnly = true)
   }
 
+  /** TRUE only when `col` of data file `f` is PROVEN null-free: from
+    * the MANIFEST when the commit-time harvest recorded it (fresh
+    * tables: no footer open), else from the footer (cached,
+    * metadata-only) for pre-nonulls commits and unharvested types. */
+  private[sources] def provenNullFree(conf: org.apache.hadoop.conf.Configuration,
+                                      snap: Snapshot, f: Path, col: String): Boolean =
+    snap.nonulls.getOrElse(s"${f.getParent.getFileName}/${f.getFileName}", Nil).contains(col) ||
+      ParquetFooterStats.provenNoNulls(conf, f, col)
+
+  /** Whether a live row at `snap` holds a NULL `col` — what a NULL-safe
+    * keyed insert asks before it lands a NULL key. No read when every
+    * file is proven null-free ([[provenNullFree]]); otherwise one Spark
+    * job over the files that are not, under the tombstone mask. */
+  def holdsNull(spark: SparkSession, dir: String, snap: Snapshot, col: String): Boolean = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = dataFiles(dir, snap).map(_._1).filterNot(provenNullFree(conf, snap, _, col))
+    files.nonEmpty && !applyDeletes(
+      spark.read.schema(StructType.fromDDL(snap.schemaDdl)).parquet(files.map(_.toString): _*),
+      snap).filter(org.apache.spark.sql.functions.col(col).isNull).isEmpty
+  }
+
   /** RETENTION (DELETE WHERE `col` < `cutoff`), manifest-planned — the
     * lifecycle op that expires aged data from an append-only table,
     * with exact SQL semantics: `NULL < cutoff` never matches, so NULL
@@ -1943,15 +1973,7 @@ object TxTable {
         val aged = files.collect {
           case (f, st) if st.get(col).exists(_._2 < cutoff) => f
         }
-        // Null-proof from the MANIFEST when the commit-time harvest
-        // recorded it (fresh tables: zero footer opens here); footer
-        // fallback (cached, metadata-only) for pre-nonulls commits.
-        def nullFree(f: Path): Boolean = {
-          val key = s"${f.getParent.getFileName}/${f.getFileName}"
-          snap.nonulls.getOrElse(key, Nil).contains(col) ||
-            ParquetFooterStats.provenNoNulls(conf, f, col)
-        }
-        val (drop, agedWithNulls) = aged.partition(nullFree)
+        val (drop, agedWithNulls) = aged.partition(provenNullFree(conf, snap, _, col))
         val straddle = files.collect {
           case (f, st) if st.get(col).forall(_._1 < cutoff) &&
             !st.get(col).exists(_._2 < cutoff) => f

@@ -25,8 +25,9 @@ import org.apache.spark.sql.types._
   * writes — the facts and the summary always, `dim_user` and `dim_time`
   * only when they gain rows — plus one for the event-id probe when the
   * replayed ids' fact files are over the driver-read bound: at most 5,
-  * and 3 for a steady-state batch. A dimension's level-0 fold, or
-  * summary hit files over the driver-read bound, add their own jobs. A
+  * and 3 for a steady-state batch. A dimension's level-0 fold, summary
+  * hit files over [[EventStore.HeldMergeBytes]], or a NULL key the
+  * manifest cannot prove absent from a dimension add their own jobs. A
   * larger batch takes the distributed path, 25–28 jobs.
   */
 object StreamIngest {

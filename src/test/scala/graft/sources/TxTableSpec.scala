@@ -27,6 +27,19 @@ class TxTableSpec extends SparkSpec {
     assert(s.version == 2 && TxTable.read(spark, dir).count() == 3)
   }
 
+  test("a commit whose Bloom key is NULL in every row gets the empty filter; holdsNull sees it") {
+    val dir = tmp()
+    TxTable.init(spark, dir, schema, bloomCols = Seq("k"))
+    TxTable.append(spark, dir, Seq((1L, 10L)).toDF("k", "v"))
+    assert(!TxTable.holdsNull(spark, dir, TxTable.snapshot(dir), "k"))
+    TxTable.append(spark, dir, Seq[(java.lang.Long, Long)]((null, 20L), (null, 30L)).toDF("k", "v"))
+    val snap = TxTable.snapshot(dir)
+    val filters = TxTable.keyBlooms(dir, snap, "k").get
+    assert(filters.size == 2 && filters.count(_.mightContainLong(1L)) == 1)
+    assert(TxTable.holdsNull(spark, dir, snap, "k"))
+    assert(TxTable.lookupKeys(spark, dir, "k", Seq(1L)).count() == 1)
+  }
+
   test("snapshot isolation: a pinned reader never sees later commits") {
     val dir = tmp()
     TxTable.init(spark, dir, schema)

@@ -104,15 +104,23 @@ class ApplyBatchSpec extends SparkSpec {
     StreamIngest.applyBatch(df(Seq(Row(null, 4L, "view", 2.0, ts(g.window - 1), "{}"))), store)
     assert(nullFacts() == before + 2)
 
-    // NULL user_id once the summary exists: the rows land as facts, a
-    // NULL-keyed dim_user row and a NULL-keyed summary row, as the first
-    // batch lands them.
+    // NULL user_id (and NULL ts) once the summary exists: a NULL user is
+    // one user and a NULL date one date, so every batch carrying them
+    // merges into the one NULL-keyed row of each store, as the
+    // recompute's GROUP BY groups them.
+    def nullCounts(): Seq[Long] = store.table(spark, "summary_user")
+      .filter(col("user_id").isNull).collect().map(_.getAs[Long]("event_cnt")).toSeq
     StreamIngest.applyBatch(df(g.batch(20, users) ++ Seq(
       Row(900001L, null, "view", 5.0, ts(g.window + 1), "{}"),
-      Row(900002L, null, "click", 6.0, ts(g.window + 2), "{}"))), store)
-    val nullSummary = store.table(spark, "summary_user").filter(col("user_id").isNull).collect()
-    assert(nullSummary.map(_.getAs[Long]("event_cnt")).toSeq == Seq(2L))
-    assert(store.table(spark, "dim_user").filter(col("user_id").isNull).count() == 1)
+      Row(900002L, null, "click", 6.0, ts(g.window + 2), "{}"),
+      Row(900003L, 8L, "click", 7.0, null, "{}"))), store)
+    assert(nullCounts() == Seq(2L))
+    StreamIngest.applyBatch(df(g.batch(20, users) ++ Seq(
+      Row(900004L, null, "view", 8.0, ts(g.window + 3), "{}"),
+      Row(900005L, 9L, "view", 9.0, null, "{}"))), store)
+    assert(nullCounts() == Seq(3L))
+    for ((t, k) <- Seq("dim_user" -> "user_id", "dim_time" -> "date_actual"))
+      assert(store.table(spark, t).filter(col(k).isNull).count() == 1, s"$t: one NULL key")
 
     // An all-replay batch commits nothing.
     val v = versions(root)
@@ -154,9 +162,13 @@ class ApplyBatchSpec extends SparkSpec {
   test("a batch over the driver bound lands what its in-bound halves land") {
     val g = new Gen(5)
     val users = (1L to 500L)
-    val base = g.batch(2000, users)
+    // NULL users in both, so the distributed path's NULL-safe insert
+    // and merge meet a stored NULL key.
+    def nullUsers(ids: Seq[Long]) = ids.map(i =>
+      Row(i, null, "view", 1.5, ts(g.window + i % 1000), "{}"))
+    val base = g.batch(2000, users) ++ nullUsers(Seq(800001L, 800002L))
     val big = g.batch(EventStore.MaxProbeKeys + 1, users, replays = 0,
-      span = 3 * day) ++ base.take(50)
+      span = 3 * day) ++ base.take(50) ++ nullUsers(Seq(800003L, 800004L))
     val (over, split) = (Files.createTempDirectory("graft_over").toString,
       Files.createTempDirectory("graft_split").toString)
     val (a, b) = (new EventStore(over), new EventStore(split))

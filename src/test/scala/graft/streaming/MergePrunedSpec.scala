@@ -112,6 +112,39 @@ class MergePrunedSpec extends SparkSpec {
     assert(store.table(spark, "summary_user").count() == 220L)
   }
 
+  test("a held merge whose hit files are over the held bound takes the distributed merge") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val deltaSchema = StructType(Seq(
+      StructField("user_id", LongType), StructField("event_cnt", LongType, nullable = false),
+      StructField("total_value", DecimalType(28, 2)), StructField("last_ts", TimestampType)))
+    def row(u: java.lang.Long, n: Long, cents: Long, sec: Long) =
+      Row(u, n, java.math.BigDecimal.valueOf(cents, 2), new java.sql.Timestamp(sec * 1000))
+    val seed = (0 until 120000).map(i => row(i.toLong * 2, 1L, i.toLong, i.toLong)) :+
+      row(null, 4L, 400L, 5L)
+    // Stored users, new users between and past them, and the NULL user.
+    val delta = (0 until 300).map(i => row(i.toLong * 797, 2L, 150L, 200000L + i)) :+
+      row(null, 1L, 100L, 7L)
+    val Seq((over, overRoot), (held, _)) = Seq(freshStore(), freshStore())
+    Seq(over, held).foreach(_.mergeSummary(spark.createDataFrame(seed.asJava, deltaSchema)))
+    val sd = s"$overRoot/summary_user"
+    assert(graft.sources.TxTable.dataFiles(sd, graft.sources.TxTable.snapshot(sd))
+      .map(f => Files.size(f._1)).sum > EventStore.HeldMergeBytes, "the summary fits the bound")
+    val (_, overJobs) = jobsDuring(over.mergeSummaryRows(spark, deltaSchema, delta))
+    val (_, heldJobs) = jobsDuring(
+      held.mergeSummaryRows(spark, deltaSchema, delta, maxHitBytes = Long.MaxValue))
+    assert(heldJobs == 1 && overJobs > 1, s"held: $heldJobs jobs, over the bound: $overJobs")
+    assert(snapshot(over) == snapshot(held))
+    val merged = over.table(spark, "summary_user")
+    assert(merged.count() == 120000 + 1 + delta.count(r => !r.isNullAt(0) && r.getLong(0) % 2 == 1))
+    assert(merged.filter(col("user_id").isNull).collect().toSeq
+      .map(r => (r.getAs[Long]("event_cnt"), r.getAs[java.math.BigDecimal]("total_value"))) ==
+      Seq((5L, new java.math.BigDecimal("5.00"))))
+    assert(merged.filter(col("user_id") === 797L * 2).collect().map(_.getAs[Long]("event_cnt"))
+      .toSeq == Seq(3L))
+  }
+
   test("oversized delta falls back to the full merge") {
     val (a, _) = freshStore(); val (b, _) = freshStore()
     seed(a, 50); seed(b, 50)
