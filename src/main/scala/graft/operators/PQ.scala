@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011): compress each vector into
@@ -143,5 +144,81 @@ object PQ {
     }.mkString("flatten(array(", ", ", "))")
     queries.selectExpr("q_id", s"explode($perSub) AS lc")
       .select(col("q_id"), col("lc.s").as("s"), col("lc.code").as("code"), col("lc.d").as("d"))
+  }
+
+  /** The IVF-ADC search plan every PQ search runs: probe cells from the
+    * GIVEN coarse centroids, score the codes frame `codesForCells`
+    * returns for the union of probed cells — (vec_id, nsq, cell, codes)
+    * rows; [[PQIndexTx.searchIVF]] gives the manifest-pruned codes scan,
+    * the self-contained queries an in-plan encode — then shortlist and
+    * exact rerank against `rerankVecs` (vec_id, e). The per-query cell
+    * gate stays in the expression, so a frame that over-delivers cells
+    * (coarser pruning) changes cost, never results. Flat PQ is the
+    * one-cell case (FAISS's nlist = 1): every code sits in the cell
+    * every query probes. Quantizers are PARAMETERS (not loaded here) so
+    * a caller serving a transactional layout can resolve them and the
+    * codes scan from ONE snapshot. */
+  private[graft] def ivfSearchImpl(queries: DataFrame, rerankVecs: DataFrame,
+                                   dsub: Int, nprobe: Int,
+                                   shortlist: Int, topK: Int,
+                                   coarse: Seq[KMeans.Cent],
+                                   cbs: Seq[Seq[KMeans.Cent]])
+                                  (codesForCells: Seq[Long] => DataFrame)
+      : DataFrame = {
+    val m = cbs.size
+    val q = queries.selectExpr("vec_id AS q_id", "e AS qe",
+      s"${VectorOps.normSq("e")} AS qnsq")
+    // Bounded driver state — |Q|·nprobe probes, |Q|·m·ksub LUT rows,
+    // |Q| norms: the ADC LUT is query-time state, exactly FAISS's
+    // in-RAM table; values are Spark-computed so the literal is
+    // engine-exact.
+    val probes: Map[Long, Seq[Long]] = q
+      .selectExpr("q_id",
+        s"${VectorOps.probeCells(KMeans.literal(coarse), "qe", "qnsq", nprobe)} AS cells")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val lutRows = lutFrame(q, cbs, dsub).collect()
+    val luts = lutRows.groupBy(_.getLong(0)).map { case (k, rows) =>
+      k -> (0 until m).map { s =>
+        rows.filter(_.getLong(1) == s).sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq
+      }
+    }
+    val qnsq = q.select(col("q_id"), col("qnsq"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val allCells = probes.values.flatten.toSeq.distinct.sorted
+    val perQuery = luts.keys.toSeq.sorted.map { qq =>
+      val adc = adcDotExpr(lutLiteral(luts(qq)), "codes", m)
+      val cellsIn = probes(qq).mkString("(", ", ", ")")
+      s"""CASE WHEN cell IN $cellsIn THEN named_struct('q_id', CAST($qq AS BIGINT),
+         |  'adc', round(($adc) / (sqrt(CAST('${qnsq(qq)}' AS DOUBLE)) * sqrt(nsq)), 6))
+         |ELSE NULL END""".stripMargin
+    }.mkString("array(", ", ", ")")
+    val scored = codesForCells(allCells)
+      .selectExpr("vec_id AS cand_id", s"explode(filter($perQuery, x -> x IS NOT NULL)) AS qa")
+      .select(col("qa.q_id").as("q_id"), col("cand_id"), col("qa.adc").as("adc"))
+    rerank(scored, q, rerankVecs, shortlist, topK)
+  }
+
+  /** Narrow shortlist window on (q_id, cand_id, adc) + exact rerank —
+    * the wide arrays join back by id only for the rerank. */
+  private def rerank(scored: DataFrame, q: DataFrame, rerankVecs: DataFrame,
+                     shortlist: Int, topK: Int): DataFrame = {
+    val sl = scored
+      .withColumn("srk", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("adc").desc, col("cand_id"))))
+      .filter(col("srk") <= shortlist)
+      .drop("srk")
+    val qv = q.select(col("q_id"), col("qe"), col("qnsq"))
+    val cv = rerankVecs.selectExpr("vec_id AS cand_id", "e AS ce",
+      s"${VectorOps.normSq("e")} AS cnsq")
+    // Broadcast the ≤ |Q|·shortlist shortlist rows into the corpus-side
+    // join — the rerank must never shuffle the corpus vectors.
+    cv.join(broadcast(sl.join(broadcast(qv), Seq("q_id"))), Seq("cand_id"))
+      .selectExpr("q_id", "cand_id", "adc",
+        s"round(${VectorOps.cosine(VectorOps.dot("qe", "ce"), "qnsq", "cnsq")}, 6) AS cosine")
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))).cast("long"))
+      .filter(col("rk") <= topK)
+      .select(col("q_id"), col("rk"), col("cand_id"), col("adc"), col("cosine"))
+      .orderBy(col("q_id"), col("rk"))
   }
 }

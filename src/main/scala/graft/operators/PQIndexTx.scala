@@ -6,37 +6,38 @@ import org.apache.spark.sql.functions._
 import graft.Trace
 import graft.sources.TxTable
 
-/** [[PQIndex]]'s IVF-PQ serving index with the codes table on
-  * [[TxTable]] instead of Hive-style `cell=` directories — the layout a
-  * streaming 100 TB deployment maintains. Same quantizers, same search
-  * results (the ADC expression carries its own per-query cell gate);
-  * what the manifest log buys over `partitionBy("cell")` parquet:
+/** Persistent IVF-PQ index: train ONCE, encode ONCE, serve many
+  * searches from the stored quantizers and codes — the deployment shape
+  * of [[PQ]] (FAISS writes the trained index to disk for the same
+  * reason; retraining per query, as the self-contained
+  * q_embed_ivfpq_search does for its oracle, is a correctness harness,
+  * not a serving plan). Searches run [[PQ.ivfSearchImpl]], the plan the
+  * self-contained queries run too. The codes table is a [[TxTable]],
+  * which gives the index:
   *
-  *   - ATOMIC appends. Plain parquet append has no commit: a crash
-  *     mid-append leaves torn files every later search half-reads.
-  *     Here a delta is one manifest claim — readers hold their
-  *     snapshot, a failed append is invisible.
-  *   - An O(hit-files) dupe probe. A keyed-insert check that scans
-  *     the ENTIRE codes table per delta is the exact
-  *     corpus-proportional read the dedup index's append shed.
-  *     Here the delta's ids refine per-dir vec_id Bloom sidecars, then
-  *     prune by manifest stats ([[TxTable.lookupFiles]], read by
-  *     [[TxTable.scanKeys]]); a typical all-new batch proves itself
-  *     fresh with ZERO stored-file reads.
-  *   - Probed-cell pruning WITHOUT partition directories. Codes are
-  *     range-clustered by (cell, vec_id), so per-file cell bounds in
-  *     the manifest make `cell IN probes` skip files exactly as
-  *     directory partitioning did — and compose with the vec_id stats
-  *     the dupe probe uses (one layout serves both access paths; the
-  *     Hive layout's directory key serves only one).
+  *   - ATOMIC appends. A delta is one manifest claim — readers hold
+  *     their snapshot, a failed append is invisible.
+  *   - An O(hit-files) dupe probe. The delta's ids refine per-dir
+  *     vec_id Bloom sidecars, then prune by manifest stats
+  *     ([[TxTable.lookupFiles]], read by [[TxTable.scanKeys]]); a
+  *     typical all-new batch proves itself fresh with ZERO stored-file
+  *     reads.
+  *   - Probed-cell pruning by manifest stats. Codes are range-clustered
+  *     by (cell, vec_id), so per-file cell bounds make `cell IN probes`
+  *     skip files, and the same files' vec_id bounds serve the dupe
+  *     probe — one layout for both access paths.
+  *   - Delete by id, eager ([[deleteIds]]) or as a tombstone
+  *     ([[deleteIdsDeferred]]), atomic under concurrent searches.
   *   - PARTIAL compaction. Per-append delta dirs fold LSM level-0
   *     style ([[TxTable.compactDirs]]) while the base dir carries by
   *     reference — a year of hourly appends never costs a full-index
-  *     rewrite, where the Hive layout compacts a cell only by
-  *     rewriting it non-atomically under readers.
+  *     rewrite.
+  *   - A retrain ([[optimizeIndex]]) that installs new quantizers and
+  *     re-encoded codes in one commit.
   *
-  * Layout under `dir`: `coarse` + `codebooks` as in [[PQIndex]] (tiny,
-  * driver-resident at search time); `codes` is a TxTable of
+  * Layout under `dir`: `coarse` (cl, c, cnsq) and `codebooks`
+  * (s, code, c, cnsq) — tiny, driver-resident at search time, one pair
+  * per quantizer epoch ([[quantPaths]]); `codes` is a TxTable of
   * (vec_id, nsq, cell, codes) with vec_id Blooms registered at init.
   */
 object PQIndexTx {
@@ -48,7 +49,7 @@ object PQIndexTx {
     * PQ codebooks) live OUTSIDE the codes table, so "which codebooks
     * decode these codes" must itself be versioned state or a retrain
     * could leave searches mixing new codebooks with old codes. Epoch 0
-    * (key absent) is the build's legacy `coarse`/`codebooks` layout;
+    * (key absent) is the build's `coarse`/`codebooks` pair;
     * [[optimizeIndex]] stages epoch E's retrained quantizers in fresh
     * `coarse_e$E`/`codebooks_e$E` dirs and advances this key in the
     * SAME atomic commit that installs the re-encoded codes — readers
@@ -70,7 +71,63 @@ object PQIndexTx {
   private def loadQuant(spark: SparkSession, dir: String, epoch: Long)
       : (Seq[KMeans.Cent], Seq[Seq[KMeans.Cent]]) = {
     val (cp, bp) = quantPaths(dir, epoch)
-    (PQIndex.loadCoarseAt(spark, cp), PQIndex.loadCodebooksAt(spark, bp))
+    (loadCoarseAt(spark, cp), loadCodebooksAt(spark, bp))
+  }
+
+  /** Fit the coarse quantizer + PQ codebooks on `v` (vec_id, e, nsq)
+    * and persist both at the given paths — explicit paths let
+    * [[optimizeIndex]] stage a retrained epoch's quantizers in fresh
+    * directories and install them atomically with the re-encoded
+    * codes, instead of overwriting the serving pair in place under
+    * concurrent searches. */
+  private[operators] def trainIVFAt(spark: SparkSession, v: DataFrame,
+                                    coarsePath: String, cbsPath: String,
+                                    m: Int, dsub: Int, ksub: Int, iters: Int,
+                                    coarseK: Int, coarseIters: Int)
+      : (Seq[KMeans.Cent], Seq[Seq[KMeans.Cent]]) = {
+    // The coarse quantizer and the PQ codebooks are INDEPENDENT fits
+    // over the same cached rows — overlap them (Par.par2): each fit is
+    // a chain of small Lloyd jobs that leaves most of the cluster idle,
+    // and the second chain back-fills those slots. Results unchanged —
+    // the fits share no state.
+    val (coarse, cbs) = Par.par2(KMeans.fit(v, coarseK, coarseIters))(
+      PQ.fit(v.select(col("vec_id"), col("e")), m, dsub, ksub, iters))
+    import spark.implicits._
+    coarse.map(ct => (ct.cl, ct.c, ct.cnsq)).toDF("cl", "c", "cnsq")
+      .coalesce(1).write.mode("overwrite").parquet(coarsePath)
+    cbs.zipWithIndex.flatMap { case (cb, s) => cb.map(ct => (s, ct.cl, ct.c, ct.cnsq)) }
+      .toDF("s", "code", "c", "cnsq")
+      .coalesce(1).write.mode("overwrite").parquet(cbsPath)
+    (coarse, cbs)
+  }
+
+  /** Corpus rows of `v` (vec_id, e, nsq; vec_id ≥ nq) encoded against
+    * fitted quantizers: (vec_id, nsq, cell, codes) — the codes table's
+    * row, and the frame [[PQ.ivfSearchImpl]] scores. */
+  private[graft] def encodedIVF(v: DataFrame, coarse: Seq[KMeans.Cent],
+                                cbs: Seq[Seq[KMeans.Cent]],
+                                dsub: Int, nq: Int): DataFrame =
+    v.filter(col("vec_id") >= nq)
+      .selectExpr("vec_id", "nsq",
+        s"${VectorOps.nearestCentroid(KMeans.literal(coarse), "e", "nsq")}.cl AS cell",
+        s"${PQ.encodeExpr(cbs, "e", dsub)} AS codes")
+
+  /** Stored coarse centroids, sorted by cell id. */
+  private[operators] def loadCoarseAt(spark: SparkSession, path: String): Seq[KMeans.Cent] =
+    spark.read.parquet(path).select(col("cl"), col("c"), col("cnsq"))
+      .collect()
+      .map(r => KMeans.Cent(r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+      .sortBy(_.cl).toSeq
+
+  /** Stored PQ codebooks back as the driver-resident structure every
+    * search needs (m·ksub rows — bounded by construction). */
+  private[operators] def loadCodebooksAt(spark: SparkSession, path: String): Seq[Seq[KMeans.Cent]] = {
+    val rows = spark.read.parquet(path)
+      .select(col("s"), col("code"), col("c"), col("cnsq")).collect()
+    val m = rows.map(_.getInt(0)).max + 1
+    (0 until m).map(s => rows.filter(_.getInt(0) == s)
+      .map(r => KMeans.Cent(r.getLong(1), r.getSeq[Double](2), r.getDouble(3)))
+      .sortBy(_.cl).toSeq)
   }
 
   /** Test-only interleave points (the [[TxTable.checkpointGateForTest]]
@@ -98,19 +155,22 @@ object PQIndexTx {
     enc.repartitionByRange(math.max(1, files), col("cell"), col("vec_id"))
       .sortWithinPartitions(col("cell"), col("vec_id"))
 
-  /** Train as [[PQIndex.buildIVF]] (same quantizers from the same
-    * input), store codes as a TxTable. `files` sizes the initial
-    * layout — default one file per coarse cell, the bound that makes
-    * an nprobe-cell search read ~nprobe files. */
+  /** Train the quantizers on `vecs` (vec_id, e) and store them with
+    * the encoded corpus (vec_id ≥ nq; the first nq ids are the query
+    * ids by the family's convention and are not encoded). `files`
+    * sizes the initial codes layout — default one file per coarse
+    * cell, the bound that makes an nprobe-cell search read ~nprobe
+    * files. */
   def buildIVF(spark: SparkSession, vecs: DataFrame, dir: String,
                m: Int, dsub: Int, ksub: Int, iters: Int, nq: Int,
                coarseK: Int, coarseIters: Int, files: Int = 0): Unit = {
     val v = vecs.select(col("vec_id"), col("e"))
       .selectExpr("vec_id", "e", s"${VectorOps.normSq("e")} AS nsq")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (coarse, cbs) = PQIndex.trainIVF(spark, v, dir, m, dsub, ksub, iters,
+    val (cp, bp) = quantPaths(dir, 0L)
+    val (coarse, cbs) = trainIVFAt(spark, v, cp, bp, m, dsub, ksub, iters,
       coarseK, coarseIters)
-    val enc = PQIndex.encodedIVF(v, coarse, cbs, dsub, nq)
+    val enc = encodedIVF(v, coarse, cbs, dsub, nq)
     val cd = codesDir(dir)
     TxTable.init(spark, cd, enc.schema, bloomCols = Seq("vec_id"))
     TxTable.append(spark, cd, clustered(enc, if (files > 0) files else coarseK))
@@ -136,11 +196,6 @@ object PQIndexTx {
     ()
   }
 
-  /** The shared append core — pin, probe, optimistic commit loop,
-    * level-0 fold — parameterized by the optional SetTransaction
-    * watermark ([[appendIVF]] passes none; [[appendIVFIfNew]] its
-    * (appId, batchId)). ONE body: the fold and probe-bound logic must
-    * not be able to drift between the batch and streaming paths. */
   /** True iff any delta id is currently TOMBSTONED on the codes table
     * — the erase-then-re-add collision [[appendImpl]] must fold before
     * committing. Driver check when the delta's ids are already in hand
@@ -158,6 +213,11 @@ object PQIndexTx {
       .filter(col("vec_id").isInCollection(maskedSet)).isEmpty
   }
 
+  /** The shared append core — pin, probe, optimistic commit loop,
+    * level-0 fold — parameterized by the optional SetTransaction
+    * watermark ([[appendIVF]] passes none; [[appendIVFIfNew]] its
+    * (appId, batchId)). ONE body: the fold and probe-bound logic must
+    * not be able to drift between the batch and streaming paths. */
   private def appendImpl(spark: SparkSession, vecs: DataFrame, dir: String,
                          dsub: Int, nq: Int, files: Int,
                          txn: Option[(String, Long)],
@@ -186,7 +246,7 @@ object PQIndexTx {
       def encode() = {
         if (encRdd != null) encRdd.unpersist(blocking = false)
         val (df, h) = org.apache.spark.sql.graft.InternalCheckpoint.pin(spark,
-          PQIndex.encodedIVF(
+          encodedIVF(
             delta.selectExpr("vec_id", "e", s"${VectorOps.normSq("e")} AS nsq"),
             coarse, cbs, dsub, nq))
         encRdd = h
@@ -282,11 +342,10 @@ object PQIndexTx {
     appendImpl(spark, vecs, dir, dsub, nq, files, txn = Some((appId, batchId)),
       txnExtra = txnExtra)
 
-  /** Same search plan as [[PQIndex.searchIVF]]; the codes scan reads
-    * only the files whose manifest (cell, …) bounds intersect the
-    * probed cells — [[TxTable.lookupFiles]] and [[TxTable.scanKeys]]
-    * on the cell column, the stats twin of the Hive layout's
-    * PartitionFilters. Quantizers and
+  /** IVF-ADC search ([[PQ.ivfSearchImpl]]) against the stored index;
+    * the codes scan reads only the files whose manifest (cell, …)
+    * bounds intersect the probed cells — [[TxTable.lookupFiles]] and
+    * [[TxTable.scanKeys]] on the cell column. Quantizers and
     * codes resolve from ONE snapshot: the manifest's epoch key names
     * the quantizer dirs that encoded exactly this snapshot's codes, so
     * a concurrent [[optimizeIndex]] flips a search atomically from
@@ -297,7 +356,7 @@ object PQIndexTx {
     val cd = codesDir(dir)
     val snap = TxTable.snapshot(cd)
     val (coarse, cbs) = loadQuant(spark, dir, quantEpoch(snap))
-    PQIndex.ivfSearchImpl(spark, queries, rerankVecs, dsub, nprobe,
+    PQ.ivfSearchImpl(queries, rerankVecs, dsub, nprobe,
       shortlist, topK, coarse, cbs) { allCells =>
       TxTable.scanKeys(spark, snap, "cell", allCells,
         TxTable.lookupFiles(cd, snap, "cell", allCells))
@@ -310,11 +369,10 @@ object PQIndexTx {
     * bounds and Bloom sidecars admit a removed id are read and
     * rewritten; every other file carries untouched — O(hit files) I/O
     * regardless of index size, atomic under concurrent searches (they
-    * hold their snapshot). The Hive layout has no equivalent short of
-    * rewriting whole cell directories non-atomically. A deleted id can
-    * be re-appended afterwards: carried Blooms over-approximate
-    * (false positives only), so the dupe probe's exact check on the
-    * hit files arbitrates. Returns (rewrittenFiles, totalFiles). */
+    * hold their snapshot). A deleted id can be re-appended afterwards:
+    * carried Blooms over-approximate (false positives only), so the
+    * dupe probe's exact check on the hit files arbitrates. Returns
+    * (rewrittenFiles, totalFiles). */
   def deleteIds(spark: SparkSession, dir: String, ids: Seq[Long]): (Long, Long) = {
     val cd = codesDir(dir)
     val schema = org.apache.spark.sql.types.StructType
@@ -495,14 +553,14 @@ object PQIndexTx {
           s"optimizeIndex: vector source covers $nCorpus of $nLive live " +
             s"ids in $cd — retraining would silently drop the uncovered vectors")
         clock.mark("plan")
-        val (coarse, cbs) = PQIndex.trainIVFAt(spark, v, cp, bp,
+        val (coarse, cbs) = trainIVFAt(spark, v, cp, bp,
           m, dsub, ksub, iters, coarseK, coarseIters)
         clock.mark("train")
         // Pin the re-encode (see appendImpl): the clustered write's
         // range-sampling pass must not evaluate the whole-corpus encode
         // expression a second time.
         val (encDf, encRdd) = org.apache.spark.sql.graft.InternalCheckpoint.pin(
-          spark, PQIndex.encodedIVF(v, coarse, cbs, dsub, nq))
+          spark, encodedIVF(v, coarse, cbs, dsub, nq))
         val enc = clustered(encDf, if (files > 0) files else coarseK)
         optimizeRaceHookForTest()
         try {

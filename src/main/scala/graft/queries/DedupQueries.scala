@@ -141,7 +141,8 @@ object DedupQueries {
     * staged result, it never re-mines candidates per downstream query
     * (round-3 task #5 / round-5 Next #3). The stage is an eager
     * lineage-cut frame that survives `catalog.clearCache` exactly like
-    * the parquet staging table (à la PQIndex) this becomes at 100 TB;
+    * the parquet staging table (a TxTable, as PQIndexTx keeps its
+    * codes) this becomes at 100 TB;
     * [[graft.operators.Stages]] owns its lifecycle (sessionUUID keys,
     * released by `Stages.drop`). */
   private[graft] def verifiedPairs(t: Tables): DataFrame =

@@ -1,11 +1,10 @@
 package graft.queries
 
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.operators.{KMeans, PQ, PQIndex, VectorOps}
+import graft.operators.{KMeans, PQ, PQIndexTx, VectorOps}
 import graft.sources.Tables
 
 /** Product-quantization ANN (operators/PQ): train → encode → ADC scan →
@@ -15,10 +14,13 @@ import graft.sources.Tables
   * every stage is hash-checked, not just the final ids.
   *
   * Scale shape: after training (k·m tiny driver-resident codebooks),
-  * the corpus pass is scan → encode fold → per-query LUT lookups →
-  * narrow (q_id, cand_id, adc) shortlist window → id-join rerank. The
-  * wide arrays never ride the window; the ADC scan reads m code lookups
-  * per vector — FAISS's IVF-ADC inner loop as a relational plan.
+  * every query here scores through ONE plan, [[PQ.ivfSearchImpl]]:
+  * codes → per-query LUT lookups → narrow (q_id, cand_id, adc)
+  * shortlist window → id-join rerank. The wide arrays never ride the
+  * window; the ADC scan reads m code lookups per vector — FAISS's
+  * IVF-ADC inner loop as a relational plan. The self-contained queries
+  * feed it an in-plan encode of the corpus, the index queries the
+  * stored codes of [[PQIndexTx]].
   */
 object PQQueries {
 
@@ -40,6 +42,21 @@ object PQQueries {
       "vec_id",
       "CAST(embedding AS array<double>) AS e")
       .selectExpr("vec_id", "e", s"${VectorOps.normSq("e")} AS nsq")
+
+  /** The shared search plan over `vecs` (vec_id, e, nsq): queries are
+    * vec_id < NQ, the rerank reads every vector. */
+  private def search(vecs: DataFrame, coarse: Seq[KMeans.Cent],
+                     cbs: Seq[Seq[KMeans.Cent]])
+                    (codesForCells: Seq[Long] => DataFrame): DataFrame =
+    PQ.ivfSearchImpl(vecs.filter(col("vec_id") < NQ), vecs, Dsub, NProbe,
+      Shortlist, TopK, coarse, cbs)(codesForCells)
+
+  /** Search the stored index at `idxDir` with the same queries. */
+  private def serve(t: Tables, idxDir: String): DataFrame = {
+    val vecs = norms(t).select(col("vec_id"), col("e"))
+    PQIndexTx.searchIVF(t.spark, idxDir, vecs.filter(col("vec_id") < NQ), vecs,
+      Dsub, NProbe, Shortlist, TopK)
+  }
 
   // ---- DuckDB oracle generation ----
 
@@ -157,7 +174,7 @@ object PQQueries {
     * `liveEraseIds` replays a RETRAIN after erasure instead: the ids
     * leave the `n` CTE itself (query rows stay), so BOTH trainings,
     * assignment, probing, ADC and rerank re-run over the live corpus —
-    * exactly [[graft.operators.PQIndexTx.optimizeIndex]]'s fixed point
+    * exactly [[PQIndexTx.optimizeIndex]]'s fixed point
     * (a from-scratch build of the live corpus), not just a scoring
     * filter. */
   private def ivfpqOracleSql: String = ivfpqOracleSql(Nil)
@@ -221,34 +238,32 @@ object PQQueries {
   }
 
   val defs: Seq[QueryDef] = Seq(
+    // Flat PQ through the IVF plan with ONE cell (FAISS's nlist = 1):
+    // every code sits in cell 0, the one cell every query probes, so the
+    // plan's cell gate passes every row.
     QueryDef(
       "q_embed_pq_topk",
       t => {
         val vecs = norms(t)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (cbs, luts, qnsq) = trainAndLuts(vecs)
-        val corpus = vecs.filter(col("vec_id") >= NQ)
-          .selectExpr("vec_id AS cand_id", "nsq",
-            s"${PQ.encodeExpr(cbs, "e", Dsub)} AS codes")
-        val perQuery = luts.keys.toSeq.sorted.map { q =>
-          val adc = PQ.adcDotExpr(PQ.lutLiteral(luts(q)), "codes", M)
-          s"""named_struct('q_id', CAST($q AS BIGINT),
-             |  'adc', round(($adc) / (sqrt(CAST('${qnsq(q)}' AS DOUBLE)) * sqrt(nsq)), 6))""".stripMargin
-        }.mkString("array(", ", ", ")")
-        val scored = corpus
-          .selectExpr("cand_id", s"explode($perQuery) AS qa")
-          .select(col("qa.q_id").as("q_id"), col("cand_id"), col("qa.adc").as("adc"))
-        graft.CacheJanitor.afterTerminalAction(shortlistRerank(scored, vecs), Seq(vecs))
+        val cbs = PQ.fit(vecs.select(col("vec_id"), col("e")), M, Dsub, Ksub, Iters)
+        val oneCell = Seq(KMeans.Cent(0L, Seq.fill(Dim)(1.0), Dim.toDouble))
+        val res = search(vecs, oneCell, cbs) { _ =>
+          vecs.filter(col("vec_id") >= NQ)
+            .selectExpr("vec_id", "nsq", "CAST(0 AS BIGINT) AS cell",
+              s"${PQ.encodeExpr(cbs, "e", Dsub)} AS codes")
+        }
+        graft.CacheJanitor.afterTerminalAction(res, Seq(vecs))
       },
       Some(oracleSql)),
 
     // IVF-PQ: the full FAISS index shape — a LEARNED coarse quantizer
-    // prunes the scan to nprobe probed cells per query, PQ-ADC scores
-    // only those cells' codes, exact rerank finishes. At 100 TB the
-    // corpus pass touches cell-pruned code bytes, not vectors: the cell
-    // id is a partition key in a real layout, so probing = partition
-    // pruning. The oracle replays BOTH trainings (coarse cosine Lloyd +
-    // 8 subspace L2 Lloyds), assignment, probing, ADC and rerank.
+    // gates each query to nprobe probed cells, PQ-ADC scores only those
+    // cells' codes, exact rerank finishes. The stored index
+    // (q_embed_ivfpq_index_search) turns the gate into manifest pruning
+    // of the codes scan. The oracle replays BOTH trainings (coarse
+    // cosine Lloyd + 8 subspace L2 Lloyds), assignment, probing, ADC
+    // and rerank.
     QueryDef(
       "q_embed_ivfpq_search",
       t => {
@@ -256,42 +271,25 @@ object PQQueries {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // Independent fits over the same cached rows — overlapped
         // (Par.par2, §2.6); identical results, the fits share no state.
-        val (coarse, (cbs, luts, qnsq)) =
+        val (coarse, cbs) =
           graft.operators.Par.par2(KMeans.fit(vecs, CoarseK, CoarseIters))(
-            trainAndLuts(vecs))
-        // Probed cells per query: bounded |Q|·nprobe collect (the IVF
-        // query plan — which partitions to read — is driver state).
-        val probes: Map[Long, Seq[Long]] = vecs.filter(col("vec_id") < NQ)
-          .selectExpr("vec_id AS q_id",
-            s"${VectorOps.probeCells(KMeans.literal(coarse), "e", "nsq", NProbe)} AS cells")
-          .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-        val corpus = vecs.filter(col("vec_id") >= NQ)
-          .selectExpr("vec_id AS cand_id", "nsq",
-            s"${VectorOps.nearestCentroid(KMeans.literal(coarse), "e", "nsq")}.cl AS cell",
-            s"${PQ.encodeExpr(cbs, "e", Dsub)} AS codes")
-        val perQuery = luts.keys.toSeq.sorted.map { q =>
-          val adc = PQ.adcDotExpr(PQ.lutLiteral(luts(q)), "codes", M)
-          val cellsIn = probes(q).mkString("(", ", ", ")")
-          s"""CASE WHEN cell IN $cellsIn THEN named_struct('q_id', CAST($q AS BIGINT),
-             |  'adc', round(($adc) / (sqrt(CAST('${qnsq(q)}' AS DOUBLE)) * sqrt(nsq)), 6))
-             |ELSE NULL END""".stripMargin
-        }.mkString("array(", ", ", ")")
-        val scored = corpus
-          .selectExpr("cand_id", s"explode(filter($perQuery, x -> x IS NOT NULL)) AS qa")
-          .select(col("qa.q_id").as("q_id"), col("cand_id"), col("qa.adc").as("adc"))
-        graft.CacheJanitor.afterTerminalAction(shortlistRerank(scored, vecs), Seq(vecs))
+            PQ.fit(vecs.select(col("vec_id"), col("e")), M, Dsub, Ksub, Iters))
+        val res = search(vecs, coarse, cbs) { _ =>
+          PQIndexTx.encodedIVF(vecs, coarse, cbs, Dsub, NQ)
+        }
+        graft.CacheJanitor.afterTerminalAction(res, Seq(vecs))
       },
       Some(ivfpqOracleSql)),
 
-    // The SERVING path of the same IVF-PQ search: build the persistent
-    // cell-partitioned index ONCE per (session, dataset) via
-    // PQIndex.buildIVF (the q_embed_ivfpq_search twin above retrains
-    // everything inside the query so the oracle can replay the whole
-    // trajectory — a correctness-harness cost), then answer from the
-    // stored codebooks + probed-cell-pruned codes scan. Both trainings
-    // are deterministic relational plans over the same input, so the
-    // search result — and therefore the ORACLE — is identical to the
-    // self-contained twin; what changes is what the bench measures:
+    // The SERVING path of the same IVF-PQ search: build the stored
+    // index ONCE per (session, dataset) via PQIndexTx.buildIVF (the
+    // q_embed_ivfpq_search twin above retrains everything inside the
+    // query so the oracle can replay the whole trajectory — a
+    // correctness-harness cost), then answer from the stored quantizers
+    // and a manifest-pruned codes scan of the probed cells. Both
+    // trainings are deterministic relational plans over the same input,
+    // so the search result — and therefore the ORACLE — is identical to
+    // the self-contained twin; what changes is what the bench measures:
     // search-only latency, the number a 100 TB deployment actually
     // serves (index build amortizes across queries, like FAISS writing
     // its index to disk).
@@ -300,14 +298,10 @@ object PQQueries {
       t => {
         val idxDir = graft.operators.Stages.tempDir(
           t.spark, s"ivfpq_idx:${t.dir}") { d =>
-            PQIndex.buildIVF(t.spark, norms(t), d,
+            PQIndexTx.buildIVF(t.spark, norms(t), d,
               M, Dsub, Ksub, Iters, NQ, CoarseK, CoarseIters)
           }
-        val vecs = norms(t)
-        PQIndex.searchIVF(t.spark, idxDir,
-          vecs.filter(col("vec_id") < NQ).select(col("vec_id"), col("e")),
-          vecs.select(col("vec_id"), col("e")),
-          Dsub, NProbe, Shortlist, TopK)
+        serve(t, idxDir)
       },
       Some(ivfpqOracleSql)),
 
@@ -317,29 +311,22 @@ object PQQueries {
     // the STORED quantizers as one ATOMIC delta commit whose
     // double-append guard reads O(hit files) from Bloom sidecars +
     // manifest stats (an all-new delta proves itself fresh with zero
-    // stored-file reads — the Hive layout's append scans the whole
-    // codes table here), then serve the search from a probed-cell scan
-    // pruned by per-file manifest bounds instead of partition
-    // directories. Training sees the full corpus either way and append
-    // encodes with the stored quantizers, so the result — and the
-    // ORACLE — is identical to the all-at-once twins above; what the
-    // gate adds is build→append→search equivalence under the
-    // transactional layout.
+    // stored-file reads), then serve the search from a probed-cell scan
+    // pruned by per-file manifest bounds. Training sees the full corpus
+    // either way and append encodes with the stored quantizers, so the
+    // result — and the ORACLE — is identical to the all-at-once twins
+    // above; what the gate adds is build→append→search equivalence.
     QueryDef(
       "q_embed_ivfpq_tx_search",
       t => {
         val idxDir = graft.operators.Stages.tempDir(
           t.spark, s"ivfpq_tx_idx:${t.dir}") { d =>
-            graft.operators.PQIndexTx.buildIVF(t.spark, norms(t), d,
+            PQIndexTx.buildIVF(t.spark, norms(t), d,
               M, Dsub, Ksub, Iters, TxSplit, CoarseK, CoarseIters)
-            graft.operators.PQIndexTx.appendIVF(t.spark,
+            PQIndexTx.appendIVF(t.spark,
               norms(t).filter(col("vec_id") < TxSplit), d, Dsub, NQ)
           }
-        val vecs = norms(t)
-        graft.operators.PQIndexTx.searchIVF(t.spark, idxDir,
-          vecs.filter(col("vec_id") < NQ).select(col("vec_id"), col("e")),
-          vecs.select(col("vec_id"), col("e")),
-          Dsub, NProbe, Shortlist, TopK)
+        serve(t, idxDir)
       },
       Some(ivfpqOracleSql)),
 
@@ -355,16 +342,12 @@ object PQQueries {
       t => {
         val idxDir = graft.operators.Stages.tempDir(
           t.spark, s"ivfpq_txdel_idx:${t.dir}") { d =>
-            graft.operators.PQIndexTx.buildIVF(t.spark, norms(t), d,
+            PQIndexTx.buildIVF(t.spark, norms(t), d,
               M, Dsub, Ksub, Iters, NQ, CoarseK, CoarseIters)
-            graft.operators.PQIndexTx.deleteIds(t.spark, d, TxDeleteIds)
+            PQIndexTx.deleteIds(t.spark, d, TxDeleteIds)
             ()
           }
-        val vecs = norms(t)
-        graft.operators.PQIndexTx.searchIVF(t.spark, idxDir,
-          vecs.filter(col("vec_id") < NQ).select(col("vec_id"), col("e")),
-          vecs.select(col("vec_id"), col("e")),
-          Dsub, NProbe, Shortlist, TopK)
+        serve(t, idxDir)
       },
       Some(ivfpqOracleSql(TxDeleteIds))),
 
@@ -379,16 +362,12 @@ object PQQueries {
       t => {
         val idxDir = graft.operators.Stages.tempDir(
           t.spark, s"ivfpq_txdeldv_idx:${t.dir}") { d =>
-            graft.operators.PQIndexTx.buildIVF(t.spark, norms(t), d,
+            PQIndexTx.buildIVF(t.spark, norms(t), d,
               M, Dsub, Ksub, Iters, NQ, CoarseK, CoarseIters)
-            graft.operators.PQIndexTx.deleteIdsDeferred(d, TxDeleteIds)
+            PQIndexTx.deleteIdsDeferred(d, TxDeleteIds)
             ()
           }
-        val vecs = norms(t)
-        graft.operators.PQIndexTx.searchIVF(t.spark, idxDir,
-          vecs.filter(col("vec_id") < NQ).select(col("vec_id"), col("e")),
-          vecs.select(col("vec_id"), col("e")),
-          Dsub, NProbe, Shortlist, TopK)
+        serve(t, idxDir)
       },
       Some(ivfpqOracleSql(TxDeleteIds))),
 
@@ -412,8 +391,8 @@ object PQQueries {
     QueryDef(
       "q_embed_ivfpq_retrain",
       t => {
-        import graft.operators.{PQIndexTx, Stages}
-        val idxDir = Stages.tempDir(t.spark, s"ivfpq_retrain_idx:${t.dir}") { d =>
+        val idxDir = graft.operators.Stages.tempDir(
+          t.spark, s"ivfpq_retrain_idx:${t.dir}") { d =>
           PQIndexTx.buildIVF(t.spark, norms(t), d,
             M, Dsub, Ksub, Iters, TxSplit, CoarseK, CoarseIters)
           PQIndexTx.markBase(d)
@@ -424,64 +403,8 @@ object PQQueries {
           norms(t).filter(col("vec_id") < TxSplit), idxDir, Dsub, NQ)
         PQIndexTx.optimizeIndex(t.spark, norms(t), idxDir,
           M, Dsub, Ksub, Iters, NQ, CoarseK, CoarseIters)
-        val vecs = norms(t)
-        PQIndexTx.searchIVF(t.spark, idxDir,
-          vecs.filter(col("vec_id") < NQ).select(col("vec_id"), col("e")),
-          vecs.select(col("vec_id"), col("e")),
-          Dsub, NProbe, Shortlist, TopK)
+        serve(t, idxDir)
       },
       Some(ivfpqOracleSql(Nil, RetrainEraseIds))),
   )
-
-  /** Train codebooks and build per-query ADC LUTs + query norms —
-    * bounded collects (|Q|·m·ksub LUT rows + |Q| norms): the ADC LUT is
-    * query-time state, exactly FAISS's in-RAM table; values are
-    * Spark-computed decimals so the literal is engine-exact. */
-  private def trainAndLuts(vecs: DataFrame)
-      : (Seq[Seq[KMeans.Cent]], Map[Long, Seq[Seq[Double]]], Map[Long, Double]) = {
-    val cbs = PQ.fit(vecs.select(col("vec_id"), col("e")), M, Dsub, Ksub, Iters)
-    val queries = vecs.filter(col("vec_id") < NQ)
-      .selectExpr("vec_id AS q_id", "e AS qe", "nsq AS qnsq")
-    val lutRows = PQ.lutFrame(queries, cbs, Dsub).collect()
-    val luts: Map[Long, Seq[Seq[Double]]] = lutRows
-      .groupBy(_.getLong(0))
-      .map { case (q, rows) =>
-        q -> (0 until M).map { s =>
-          rows.filter(_.getLong(1) == s).sortBy(_.getLong(2)).map(_.getDouble(3)).toSeq
-        }
-      }
-    val qnsq: Map[Long, Double] = queries.select(col("q_id"), col("qnsq"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    (cbs, luts, qnsq)
-  }
-
-  /** Narrow shortlist window on (q_id, cand_id, adc) — wide arrays only
-    * join back by id for the exact rerank. */
-  private def shortlistRerank(scored: DataFrame, vecs: DataFrame): DataFrame = {
-    val sl = scored
-      .withColumn("srk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("adc").desc, col("cand_id"))))
-      .filter(col("srk") <= Shortlist)
-      .drop("srk")
-    // Broadcast ONLY the |Q| query vectors: the unfiltered frame would
-    // ship the whole N×64-double corpus to every executor — harmless at
-    // sf0.1, an executor OOM at real corpus size. The candidate side
-    // stays the full corpus scan, but only |Q|·shortlist rows survive
-    // the inner join on the shortlist ids (PQIndex.rerank has the same
-    // shape by construction).
-    val qv = vecs.filter(col("vec_id") < NQ)
-      .selectExpr("vec_id AS q_id", "e AS qe", "nsq AS qnsq")
-    val cv = vecs.selectExpr("vec_id AS cand_id", "e AS ce", "nsq AS cnsq")
-    // The shortlist (with query vectors attached) is ≤ |Q|·shortlist
-    // rows BY CONSTRUCTION — broadcast it into the corpus-side join so
-    // the rerank never shuffles the corpus vectors.
-    cv.join(broadcast(sl.join(broadcast(qv), Seq("q_id"))), Seq("cand_id"))
-      .selectExpr("q_id", "cand_id", "adc",
-        s"round(${VectorOps.cosine(VectorOps.dot("qe", "ce"), "qnsq", "cnsq")}, 6) AS cosine")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("cand_id"))).cast("long"))
-      .filter(col("rk") <= TopK)
-      .select(col("q_id"), col("rk"), col("cand_id"), col("adc"), col("cosine"))
-      .orderBy(col("q_id"), col("rk"))
-  }
 }

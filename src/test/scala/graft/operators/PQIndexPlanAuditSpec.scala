@@ -1,14 +1,14 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.sources.Tables
+import graft.sources.{Tables, TxTable}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.col
 
-/** The IVF claim made concrete: with codes PARTITIONED BY cell, probing
-  * is partition pruning — the scan plans with PartitionFilters on the
-  * probed cells and never lists the others. Runs in the isolated
-  * plan-audit JVM (build.sbt groups *PlanAuditSpec), AQE off.
+/** The serving IVF-PQ queries' plans: probing prunes the codes scan by
+  * per-file manifest bounds, every codes file a query reads is a live
+  * file of the index's snapshot, and no cross join appears. Runs in the
+  * isolated plan-audit JVM (build.sbt groups *PlanAuditSpec), AQE off.
   */
 class PQIndexPlanAuditSpec extends SparkSpec {
 
@@ -18,65 +18,38 @@ class PQIndexPlanAuditSpec extends SparkSpec {
     s
   }
 
-  test("probed-cell scan prunes partitions at the codes table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqaud").toString
-    val t = Tables(spark, SparkSpec.Sf0001)
-    val vecs = t.embeddings
-      .selectExpr("vec_id", "CAST(embedding AS array<double>) AS e")
-      .persist()
-    PQIndex.buildIVF(spark, vecs, dir, m = 8, dsub = 8, ksub = 8, iters = 2,
-      nq = 5, coarseK = 8, coarseIters = 3)
-    val scan = PQIndex.prunedCodesScan(spark, dir, cells = Seq(0L, 3L))
-    val plan = scan.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"cell filter did not reach the scan as a partition filter:\n$plan")
-    // The filter must be a metadata operation: no post-scan Filter node
-    // re-checking cell (Spark drops it when pruning fully covers it).
-    // Partition columns come back type-inferred from directory names
-    // (int here) — normalize before comparing.
-    val cells = scan.select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(cells.subsetOf(Set(0L, 3L)), s"pruned scan leaked cells: $cells")
-    vecs.unpersist()
+  /** Plan `name` and check its serving shape: no cross join, and every
+    * codes file it reads is a live data file of the index's current
+    * snapshot. Returns the codes table dir, its live file count and the
+    * files the query reads. */
+  private def auditServing(name: String): (String, Int, Set[String]) = {
+    spark.sharedState.cacheManager.clearCache()
+    val df = graft.SparkEntry.queries(name)(spark, SparkSpec.Sf0001)
+    val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(!plan.contains("CartesianProduct"),
+      s"$name: serving search regressed to a cross join:\n$plan")
+    val codeFiles = df.inputFiles.filter(_.contains("/codes/data/"))
+      .map(f => java.nio.file.Paths.get(new java.net.URI(f)).toString).toSet
+    assert(codeFiles.nonEmpty, s"$name: no codes files in the serving scan")
+    val cd = codeFiles.head.replaceAll("/data/[^/]+/[^/]+$", "")
+    val live = TxTable.dataFiles(cd, TxTable.snapshot(cd))
+      .map(_._1.toAbsolutePath.toString).toSet
+    val stray = codeFiles -- live
+    assert(stray.isEmpty, s"$name read codes files outside the snapshot: $stray")
+    (cd, live.size, codeFiles)
   }
 
   test("q_embed_ivfpq_index_search: the SERVING plan scans pruned cells, no cross join") {
-    // The registered query (not just the raw scan helper): its plan must
-    // carry the probed-cell PartitionFilters at the codes table and stay
-    // free of cross joins — the shape a 100 TB deployment executes.
-    spark.sharedState.cacheManager.clearCache()
-    val df = graft.SparkEntry.queries("q_embed_ivfpq_index_search")(
-      spark, SparkSpec.Sf0001)
-    val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"probed cells did not reach the codes scan as partition filters:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"serving search regressed to a cross join:\n$plan")
+    auditServing("q_embed_ivfpq_index_search")
   }
 
   test("q_embed_ivfpq_tx_search: manifest-backed serving reads only planned codes files") {
-    // The TxTable layout's twin of the PartitionFilters assertion:
-    // probing prunes by per-file manifest bounds, so the registered
-    // query's plan must read a strict subset of the codes table's
-    // files (and stay cross-join-free).
-    spark.sharedState.cacheManager.clearCache()
-    val df = graft.SparkEntry.queries("q_embed_ivfpq_tx_search")(
-      spark, SparkSpec.Sf0001)
-    val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(!plan.contains("CartesianProduct"),
-      s"manifest-backed serving search regressed to a cross join:\n$plan")
-    val codeFiles = df.inputFiles.filter(_.contains("/codes/data/")).toSet
-    assert(codeFiles.nonEmpty, "no codes files in the serving scan")
-    val cd = codeFiles.head.stripPrefix("file:")
-      .replaceAll("/data/[^/]+/[^/]+$", "")
-    val all = graft.sources.TxTable
-      .dataFiles(cd, graft.sources.TxTable.snapshot(cd)).size
-    // 5 queries × 2 probes can legitimately cover every cell — the
-    // registered query's scan may read all files. Per-QUERY pruning is
-    // the claim: a single query's 2 probed cells must plan a strict
-    // file subset on the same stored index.
-    assert(codeFiles.size <= all)
+    // Probing prunes by per-file manifest bounds. 5 queries × 2 probes
+    // can legitimately cover every cell, so the registered query's scan
+    // may read all files; per-QUERY pruning is the claim: a single
+    // query's 2 probed cells must plan a strict file subset on the same
+    // stored index.
+    val (cd, all, _) = auditServing("q_embed_ivfpq_tx_search")
     val t = Tables(spark, SparkSpec.Sf0001)
     val vecs = t.embeddings
       .selectExpr("vec_id", "CAST(embedding AS array<double>) AS e")

@@ -4,12 +4,11 @@ import graft.SparkSpec
 import graft.sources.{Tables, TxTable}
 import org.apache.spark.sql.functions._
 
-/** The manifest-backed IVF-PQ index must answer exactly what the
-  * Hive-layout index (and therefore the oracle-gated IVF-PQ query)
-  * answers, while its maintenance paths read O(delta)/O(hit files):
-  * the dupe probe plans from Bloom sidecars + manifest stats, the
-  * probed-cell scan prunes files by manifest bounds, and compaction
-  * folds only level-0 dirs.
+/** The stored IVF-PQ index must answer exactly what the oracle-gated
+  * self-contained IVF-PQ query answers, while its maintenance paths
+  * read O(delta)/O(hit files): the dupe probe plans from Bloom sidecars
+  * + manifest stats, the probed-cell scan prunes files by manifest
+  * bounds, and compaction folds only level-0 dirs.
   */
 class PQIndexTxSpec extends SparkSpec {
 
@@ -29,21 +28,42 @@ class PQIndexTxSpec extends SparkSpec {
         shortlist = shortlist, topK = topK)
       .collect().toSeq.map(_.toSeq)
 
-  test("manifest-backed search equals the Hive-layout index search") {
+  test("manifest-backed search equals the self-contained IVF-PQ query") {
     val t = Tables(spark, SparkSpec.Sf0001)
     val vecs = vecsOf(t).persist()
-    val dirH = tmp("graft_pqtx_h")
-    val dirT = tmp("graft_pqtx_t")
-    PQIndex.buildIVF(spark, vecs, dirH, m, dsub, ksub, iters, nq,
+    val dir = tmp("graft_pqtx_t")
+    PQIndexTx.buildIVF(spark, vecs, dir, m, dsub, ksub, iters, nq,
       coarseK, coarseIters)
-    PQIndexTx.buildIVF(spark, vecs, dirT, m, dsub, ksub, iters, nq,
-      coarseK, coarseIters)
-    val want = PQIndex.searchIVF(spark, dirH, vecs.filter(col("vec_id") < nq),
-        rerankVecs = vecs, dsub = dsub, nprobe = nprobe,
-        shortlist = shortlist, topK = topK)
+    val want = graft.queries.PQQueries.defs
+      .find(_.name == "q_embed_ivfpq_search").get.build(t)
       .collect().toSeq.map(_.toSeq)
-    assert(search(dirT, vecs) === want,
-      "manifest-backed search diverged from the Hive-layout index")
+    assert(search(dir, vecs) === want,
+      "manifest-backed search diverged from the self-contained IVF-PQ query")
+    vecs.unpersist()
+  }
+
+  test("serving query equals the self-contained IVF-PQ query") {
+    val t = Tables(spark, SparkSpec.Sf0001)
+    def rows(name: String) = graft.queries.PQQueries.defs
+      .find(_.name == name).get.build(t)
+      .collect().toSeq.map(_.toSeq)
+    val want = rows("q_embed_ivfpq_search")
+    assert(want.nonEmpty)
+    assert(rows("q_embed_ivfpq_index_search") === want,
+      "q_embed_ivfpq_index_search diverged from the self-contained IVF-PQ query")
+  }
+
+  test("codebooks survive the parquet round-trip bit-exactly") {
+    val t = Tables(spark, SparkSpec.Sf0001)
+    val vecs = vecsOf(t).persist()
+    val dir = tmp("graft_pqtx_cb")
+    PQIndexTx.buildIVF(spark, vecs, dir, m = 4, dsub = 16, ksub, iters, nq,
+      coarseK, coarseIters)
+    val (cp, bp) = PQIndexTx.quantPaths(dir, 0L)
+    assert(PQIndexTx.loadCodebooksAt(spark, bp) === PQ.fit(vecs, 4, 16, ksub, iters))
+    assert(PQIndexTx.loadCoarseAt(spark, cp) === KMeans.fit(
+      vecs.selectExpr("vec_id", "e", s"${VectorOps.normSq("e")} AS nsq"),
+      coarseK, coarseIters).sortBy(_.cl))
     vecs.unpersist()
   }
 
